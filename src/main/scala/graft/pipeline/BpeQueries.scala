@@ -488,15 +488,8 @@ object BpeQueries {
     def staged(name: String, df: org.apache.spark.sql.DataFrame) =
       if (stage) graft.OracleStage.stage(name, df) else df
 
-    // r18 experiment seam: the loop's 18 selection jobs run ~4 sub-MB
-    // exchanges each; AQE materializes every exchange as its own job
-    // (~7 driver round-trips/pass measured). Toggling it off for the loop
-    // only (restored in the finally) collapses each action to one job.
-    val aqeOff = sys.env.get("SPARK_GRAFT_DEEP_AQE_OFF").contains("1")
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    if (aqeOff) spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-
+    // (AQE stays on: turning it off for this loop was measured a loss in
+    // r18 — 16.4 → 19.6 s wall, 31 → 128 CPU-s; OPTIMIZATION_r18.md.)
     var state = staged("bpe_deep_state_0",
       state0.select(col("word"), col("freq"), col("syms")))
       .stableCheckpoint()
@@ -544,8 +537,6 @@ object BpeQueries {
         "n_merges", "n_tokens_after", "vocab_after")
       .orderBy(col("pass"), col("pair_cnt").desc, col("lsym"), col("rsym"))
     (trace, state)
-
-    } finally if (aqeOff) spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
   }
 
   /** The phrase-level state-0 builder shared by the registered gate,

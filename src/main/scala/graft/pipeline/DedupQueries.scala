@@ -135,19 +135,6 @@ object DedupQueries {
     * (every caller keys by doc_id; duplicate ids would previously have
     * been collapsed by the global distinct).
     */
-  /** Fan-out width for the pre-shingle repartition: parameterized
-    * (SPARK_GRAFT_SHINGLE_FANOUT) with a parallelism-derived default —
-    * r18 measured the r17 `defaultParallelism` (=32 local) width burning
-    * 3-13x the process CPU of the serial shape for a ~1.2x wall win
-    * (allocation/GC churn of 32 concurrent string-heavy explode tasks;
-    * same pathology as the rejected PQ fan-out). min(8, parallelism)
-    * keeps ~all of the wall win inside the CPU-mover gate — the same
-    * width the r17 probe fan-outs settled on, now measured here too.
-    */
-  private def shingleFanout(docs: DataFrame): Int =
-    sys.env.get("SPARK_GRAFT_SHINGLE_FANOUT").map(_.toInt)
-      .getOrElse(math.min(8, docs.sparkSession.sparkContext.defaultParallelism))
-
   def shinglePostings(docs: DataFrame): DataFrame = {
     import graft.functions.TextFunctions
     import graft.operators.Checkpoints.StableOps
@@ -163,15 +150,19 @@ object DedupQueries {
       require(n == nd,
         s"shinglePostings caller fed duplicate doc_id rows: $n rows, $nd distinct ids")
     }
-    val fan = shingleFanout(docs)
-    (if (fan <= 1) docs else docs
-      // fan the raw doc rows out BEFORE the CPU-dominant shingle
-      // derivation: the gate corpus is one parquet split, and without this
-      // the whole tokenize+shingle explode runs on a single core (the
-      // q_source_overlap lesson; measured again here in r17). Shuffling
-      // raw docs is cheap (rows, not shingles); at 100 TB the scan has
-      // thousands of splits and this is a no-op-sized skew safety net.
-      .repartition(fan))
+    // fan the raw doc rows out BEFORE the CPU-dominant shingle
+    // derivation: the gate corpus is one parquet split, and without this
+    // the whole tokenize+shingle explode runs on a single core (the
+    // q_source_overlap lesson; measured again here in r17). Shuffling
+    // raw docs is cheap (rows, not shingles); at 100 TB the scan has
+    // thousands of splits and this is a no-op-sized skew safety net.
+    // Width min(8, parallelism), SPARK_GRAFT_SHINGLE_FANOUT overrides: r18
+    // measured the r17 `defaultParallelism` (=32 local) width burning
+    // 3-13x the process CPU of the serial shape for a ~1.2x wall win
+    // (allocation/GC churn of 32 concurrent string-heavy explode tasks;
+    // same pathology as the rejected PQ fan-out); 8 keeps ~all of the wall
+    // win inside the CPU-mover gate.
+    Fanout(docs, "SPARK_GRAFT_SHINGLE_FANOUT", default = 8)
       .select(col("doc_id"),
         explode(TextFunctions.wordShingles(TextFunctions.tokens(col("text")))).as("sh"))
       // EAGER checkpoint: every caller fans this frame into several

@@ -15,9 +15,29 @@ import org.apache.spark.sql.DataFrame
   * net; width stays parallelism-derived, never a local constant.
   */
 private[pipeline] object Fanout {
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** The fan-out width: `envVar` when it is set to an integer, else
+    * min(`default`, parallelism). A malformed value falls back to the
+    * default with a warning naming the variable — a typo in a tuning knob
+    * must not fail the query with a bare NumberFormatException.
+    */
+  def width(df: DataFrame, envVar: String, default: Int): Int = {
+    lazy val fallback = math.min(default, df.sparkSession.sparkContext.defaultParallelism)
+    parse(envVar, sys.env.get(envVar)).getOrElse(fallback)
+  }
+
+  /** `raw` as an integer width; None when unset or malformed (warned). */
+  private[pipeline] def parse(envVar: String, raw: Option[String]): Option[Int] =
+    raw.flatMap { s =>
+      val n = s.trim.toIntOption
+      if (n.isEmpty)
+        log.warn(s"$envVar='$s' is not an integer; using the default fan-out width")
+      n
+    }
+
   def apply(df: DataFrame, envVar: String, default: Int = 4): DataFrame = {
-    val fan = sys.env.get(envVar).map(_.toInt)
-      .getOrElse(math.min(default, df.sparkSession.sparkContext.defaultParallelism))
+    val fan = width(df, envVar, default)
     if (fan <= 1) df else df.repartition(fan)
   }
 }

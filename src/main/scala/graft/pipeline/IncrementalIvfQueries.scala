@@ -3,8 +3,8 @@ package graft.pipeline
 import graft.QueryDef
 import graft.analytics.Tables
 import graft.operators.Checkpoints.StableOps
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.VectorExpressions.centroidSquaredL2
 
 /** INCREMENTAL vector-index maintenance — the missing half of the ANN
   * story: at 100 TB the IVF index is NOT retrained per ingest. Coarse
@@ -33,11 +33,13 @@ import org.apache.spark.sql.functions._
   * FULL RETRAIN on old+new — the drift cost of not retraining is
   * reported, not hidden.
   *
-  * Scale shape: centroids are k×64 — broadcast; assignment is one
-  * map-side pass per ingest batch (never touches the existing index);
-  * the probed search joins the bounded probe list before any scoring
-  * (same prune as q_ann_ivf_topk); the only corpus-wide exchange is
-  * the per-vector argmin aggregate.
+  * Scale shape: the frozen centroids are one k×64 row — broadcast;
+  * assignment is one narrow per-row pass per ingest batch (the
+  * [[org.apache.spark.sql.graft.CentroidSquaredL2]] kernel + argmin,
+  * never touching the existing index); the probed search joins the
+  * bounded probe list before any scoring (same prune as q_ann_ivf_topk)
+  * and re-ranks with the same kernel against the broadcast query vector.
+  * No corpus-wide exchange: the top-10 is a TakeOrdered.
   */
 object IncrementalIvfQueries {
 
@@ -93,30 +95,24 @@ object IncrementalIvfQueries {
     QueryDef("q_ann_ivf_incremental", oracleSql) { (s, d) =>
       val e = Tables.embeddings(s, d)
       val half = e.count() / 2
-      val q = SimilarityQueries.quantComponents(e)
+      val q = SimilarityQueries.quantizedVectors(e)
       // centroids trained on the OLD snapshot only, frozen thereafter
       val c1 = SimilarityQueries.lloydCentroids(
         q.filter(col("vec_id") < half), K)
-        .stableCheckpoint() // k×64 rows; train once for both consumers
+        .stableCheckpoint() // one k×64 row; train once for both consumers
       // ONE assignment law serves build AND ingest: every vector (old at
       // build time, new on arrival) takes its nearest frozen list
-      val dall = SimilarityQueries.distToCentroids(q, c1)
-      val asg = dall.groupBy("vec_id")
-        .agg(min(struct(col("dist"), col("cluster"))).as("m"))
-        .select(col("vec_id"), col("m.cluster").as("cluster"))
+      val dall = SimilarityQueries.centroidDistances(q, c1)
       val probed = dall.filter(col("vec_id") === QueryVec)
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("dist"), col("cluster"))))
-        .filter(col("rn") <= NProbe)
-        .select("cluster")
-      val qq = q.filter(col("vec_id") === QueryVec)
-        .select(col("i"), col("v").as("vq"))
-      q.join(asg.join(broadcast(probed), "cluster")
-          .filter(col("vec_id") =!= QueryVec).select("vec_id"), "vec_id")
-        .join(broadcast(qq), "i")
-        .groupBy("vec_id")
-        .agg(sum((col("v") - col("vq")) * (col("v") - col("vq"))).as("dist"))
-        .select(col("vec_id"), (col("vec_id") >= half).as("is_new"), col("dist"))
+        .select(explode(slice(sort_array(col("dc")), 1, NProbe)).as("m"))
+        .select(col("m.cluster").as("cluster"))
+      val qq = q.filter(col("vec_id") === QueryVec).select(array(col("qv")).as("qq"))
+      dall.select(col("vec_id"), col("qv"), array_min(col("dc"))("cluster").as("cluster"))
+        .join(broadcast(probed), "cluster")
+        .filter(col("vec_id") =!= QueryVec)
+        .crossJoin(broadcast(qq))
+        .select(col("vec_id"), (col("vec_id") >= half).as("is_new"),
+          element_at(centroidSquaredL2(col("qv"), col("qq"), vecScale = 1L), 1).as("dist"))
         .orderBy("dist", "vec_id")
         .limit(TopK)
     })

@@ -7,6 +7,7 @@ import graft.operators.Checkpoints.StableOps
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.VectorExpressions.{centroidSquaredL2, quantize}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (`array<float>`, 64-dim, 10 cluster labels).
@@ -113,8 +114,11 @@ object SimilarityQueries {
 
   /** Exact all-pairs embedding near-dup BASELINE — deliberately guarded.
     *
-    * The plan broadcasts the FULL corpus and scores O(n²) pairs: correct and
-    * fast at verification scale, an OOM + quadratic wall at production scale.
+    * The plan broadcasts the FULL corpus and scores O(n²) pairs, once: the
+    * τ-bounded survivors cross one single-partition exchange and sort there
+    * (a range exchange would sample, and so re-run, the nested-loop join).
+    * Correct and fast at verification scale, an OOM + quadratic wall at
+    * production scale.
     * The guard refuses corpora beyond `maxCorpus` rows (a cheap parquet
     * metadata count) so the baseline cannot be lifted into a 100 TB pipeline
     * unnoticed — `q_dedup_embedding_lsh` is the scale path.
@@ -147,7 +151,15 @@ object SimilarityQueries {
       // doubles an ulp from τ must not flip the set under the hash gate
       .filter(round(col("cos"), 9) >= minCos)
       .select(col("vec_a"), col("vec_b"), round(col("cos"), 9).as("cosine"))
-      .orderBy("vec_a", "vec_b")
+      // The surviving pairs are few (τ bounds them), the n²/2 dot products
+      // that find them are not. A global orderBy would put a range exchange
+      // straight on the nested-loop join, and its partitioner SAMPLES its
+      // input: a job running every dot product before the shuffle runs
+      // them again. One single-partition exchange evaluates the join once
+      // and the bounded pair set sorts in that partition; rows and order
+      // are those of orderBy(vec_a, vec_b).
+      .repartition(1)
+      .sortWithinPartitions("vec_a", "vec_b")
   }
 
   /** RP-LSH banded near-dup pairs at threshold `minCos`: adaptive banding
@@ -201,67 +213,91 @@ object SimilarityQueries {
     *  - centroids live at ×100 that scale: init `c = v·100`, update
     *    `c = (Σv·100) DIV n` — exact integer floor-mean;
     *  - distances are Σ(v·100 − c)² ≤ 64·(2.6·10⁶)² ≈ 4·10¹⁴, safely in
-    *    BIGINT; argmin breaks ties by cluster id via min(struct(dist,
-    *    cluster)).
+    *    BIGINT; argmin breaks ties to the lower cluster id, as
+    *    min(struct(dist, cluster)) does.
     *
-    * Scale shape: centroids are k×64 rows — always broadcast; each
-    * assignment is explode → broadcast join → per-vector partial-agg
-    * argmin (linear, no big shuffle); the update aggregates to k×64 cells.
-    * Iteration count is fixed (2) — at 100 TB each extra Lloyd round is
-    * one more linear pass, chosen by the pipeline owner, not the engine.
+    * Scale shape: each vector stays ONE row `(vec_id, qv: array<bigint>)`
+    * (the [[org.apache.spark.sql.graft.QuantizeVector]] kernel). The
+    * current centroids are one row — an array of the non-empty clusters'
+    * k×dim values, broadcast — and an assignment pass is a narrow map: the
+    * [[org.apache.spark.sql.graft.CentroidSquaredL2]] kernel scores the
+    * row against every centroid and `array_min` takes the argmin. No
+    * component is exploded or joined to a centroid, so a pass is n rows
+    * through one map, not n·dim·k join rows into a per-vector aggregate.
+    * The update is the one aggregate: the assigned rows explode into the
+    * `groupBy(cluster, i)` floor-mean, k×dim cells, nested back into the
+    * next one-row centroid array. Iteration count is fixed (2) — at 100 TB
+    * each extra Lloyd round is one more linear pass, chosen by the
+    * pipeline owner, not the engine.
     */
-  private def kmeansArgmin(d: org.apache.spark.sql.DataFrame) =
-    d.groupBy("vec_id")
-      .agg(min(struct(col("dist"), col("cluster"))).as("m"))
-      .select(col("vec_id"), col("m.cluster").as("cluster"),
-        col("m.dist").as("dist"))
+  private val CentroidScale = 100L
 
-  /** The final Lloyd round's full (vec, cluster) distance table — the
-    * shared input of the primary assignment ([[kmeansAssignments]], its
-    * argmin) and the IVF multi-probe assignment (its top-nprobe ranks).
+  /** The corpus as ×10⁴(+10⁴) quantized vectors, one row each: (vec_id,
+    * qv: array<bigint>). A NULL or empty vector has no component to
+    * cluster and takes no part.
     */
-  /** The shared ×10⁴(+10⁴ shift) quantized component frame (vec_id, i, v). */
-  private[pipeline] def quantComponents(
+  private[pipeline] def quantizedVectors(
       e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    e.select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "vf")))
-      .select(col("vec_id"), col("i"),
-        (round(col("vf").cast("double") * 10000, 0).cast("long") + 10000L).as("v"))
+    e.filter(size(col("embedding")) > 0)
+      .select(col("vec_id"), quantize(col("embedding")).as("qv"))
 
-  /** Integer squared-L2 of every vector in `q` to every centroid — the
-    * assignment distance table (cent is k×64, always broadcast).
+  /** (cluster, i, c) centroid cells → the ONE-row broadcast side of an
+    * assignment pass: `cent: array<struct<cluster: int, c: array<bigint>>>`,
+    * clusters ascending, each `c` indexed by component (a cluster's cells
+    * cover components 0..d-1 of its longest member, so position = i). Only
+    * clusters that have cells appear — an emptied cluster is no centroid.
     */
-  private[pipeline] def distToCentroids(q: org.apache.spark.sql.DataFrame,
-      cent: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val diff = col("v") * 100L - col("c")
-    q.join(broadcast(cent), "i")
-      .groupBy("vec_id", "cluster")
-      .agg(sum(diff * diff).as("dist"))
-  }
+  private[pipeline] def centroidArray(
+      cells: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    cells.agg(sort_array(collect_list(struct(col("cluster"), col("i"), col("c")))).as("cells"))
+      .select(transform(array_distinct(col("cells.cluster")), cl =>
+        struct(cl.as("cluster"),
+          filter(col("cells"), x => x("cluster") === cl)("c").as("c"))).as("cent"))
 
-  /** The round-2 Lloyd centroids (cluster, i, c at ×100 scale) trained on
-    * `q` alone — exposed so an INCREMENTAL index can assign new vectors
+  /** Every vector of `q` scored against every centroid of the one-row
+    * `cent` frame: (vec_id, qv, dc), `dc` one struct(dist, cluster) per
+    * centroid — `array_min(dc)` is the assignment, `sort_array(dc)` the
+    * probe order.
+    */
+  private[pipeline] def centroidDistances(q: org.apache.spark.sql.DataFrame,
+      cent: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    q.crossJoin(broadcast(cent))
+      .select(col("vec_id"), col("qv"),
+        zip_with(centroidSquaredL2(col("qv"), col("cent.c"), CentroidScale), col("cent"),
+          (d, c) => struct(d.as("dist"), c("cluster").as("cluster"))).as("dc"))
+
+  /** The round-2 Lloyd centroids (one-row `cent` frame, ×100 scale) trained
+    * on `q` alone — exposed so an INCREMENTAL index can assign new vectors
     * against centroids trained on an older snapshot (q_ann_ivf_incremental).
     */
   private[pipeline] def lloydCentroids(q: org.apache.spark.sql.DataFrame,
       k: Int): org.apache.spark.sql.DataFrame = {
-    val c0 = q.filter(col("vec_id") < k)
-      .select(col("vec_id").cast("int").as("cluster"), col("i"),
-        (col("v") * 100L).as("c"))
-    val a1 = kmeansArgmin(distToCentroids(q, c0))
-    q.join(a1.select("vec_id", "cluster"), "vec_id")
+    val c0 = centroidArray(q.filter(col("vec_id") < k)
+      .select(col("vec_id").cast("int").as("cluster"), posexplode(col("qv")).as(Seq("i", "v")))
+      .select(col("cluster"), col("i"), (col("v") * CentroidScale).as("c")))
+    centroidArray(centroidDistances(q, c0)
+      .select(array_min(col("dc"))("cluster").as("cluster"),
+        posexplode(col("qv")).as(Seq("i", "v")))
       .groupBy("cluster", "i")
-      .agg(expr("(SUM(v) * 100) DIV COUNT(1)").as("c"))
+      .agg(expr(s"(SUM(v) * $CentroidScale) DIV COUNT(1)").as("c")))
   }
 
+  /** The final Lloyd round's scores (vec_id, qv, dc) — the shared input of
+    * the primary assignment ([[kmeansAssignments]], its argmin) and the IVF
+    * multi-probe assignment (its top-nprobe ranks).
+    */
   private[pipeline] def kmeansDistances(e: org.apache.spark.sql.DataFrame,
       k: Int): org.apache.spark.sql.DataFrame = {
-    val q = quantComponents(e)
-    distToCentroids(q, lloydCentroids(q, k))
+    val q = quantizedVectors(e)
+    centroidDistances(q, lloydCentroids(q, k))
   }
 
+  /** (vec_id, cluster, dist): every vector's nearest round-2 centroid. */
   private[pipeline] def kmeansAssignments(e: org.apache.spark.sql.DataFrame,
       k: Int): org.apache.spark.sql.DataFrame =
-    kmeansArgmin(kmeansDistances(e, k))
+    kmeansDistances(e, k)
+      .select(col("vec_id"), array_min(col("dc")).as("m"))
+      .select(col("vec_id"), col("m.cluster").as("cluster"), col("m.dist").as("dist"))
 
   /** Shared DuckDB CTE chain mirroring [[kmeansAssignments]] (k=8): ends in
     * `a2(vec_id, cluster, dist)`. SUM over BIGINT is HUGEINT in DuckDB, so
@@ -355,9 +391,7 @@ object SimilarityQueries {
     // ≤1.5x CPU — inside the mover gate), width 8 = 14.3 / 62 (serve_batch
     // 2.17x CPU — gate fail). min(4, parallelism) kept; env override
     // SPARK_GRAFT_PQ_FANOUT.)
-    val fan = sys.env.get("SPARK_GRAFT_PQ_FANOUT").map(_.toInt)
-      .getOrElse(math.min(4, e.sparkSession.sparkContext.defaultParallelism))
-    (if (fan <= 1) e else e.repartition(fan))
+    Fanout(e, "SPARK_GRAFT_PQ_FANOUT")
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "vf")))
       .select(col("vec_id"), col("i"), expr("i DIV 16").as("sub"),
         (round(col("vf").cast("double") * 10000, 0).cast("long") + 10000L).as("v"))
@@ -438,11 +472,9 @@ object SimilarityQueries {
     // one distance frame feeds BOTH sides; eager checkpoint so the Lloyd
     // rounds run once, not once per consumer
     val asgP = kmeansDistances(e, k)
-      .withColumn("prb", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("vec_id").orderBy("dist", "cluster")))
-      .filter(col("prb") <= nprobe)
-      .select(col("vec_id"), col("cluster"), col("prb"))
+      .select(col("vec_id"),
+        posexplode(slice(sort_array(col("dc")), 1, nprobe)).as(Seq("p", "m")))
+      .select(col("vec_id"), col("m.cluster").as("cluster"), (col("p") + 1).as("prb"))
       .stableCheckpoint()
     val vecs = e.select(col("vec_id"), col("embedding"),
       norm(col("embedding")).as("nrm"))

@@ -2,6 +2,17 @@
   * because the Expression→Column bridge (`classic.ExpressionUtils`) and
   * `AbstractDataType` are `private[sql]` — the documented pattern for
   * libraries shipping custom codegen'd expressions.
+  *
+  * The expressions, each bit-identical to a declarative formulation that
+  * stays the reference in the specs:
+  *  - [[FloatVectorDot]]: the float/double dot product of similarity search;
+  *  - [[RpBandKeys]]: every RP-LSH band key of a vector in one pass;
+  *  - [[QuantizeVector]]: the ×10⁴(+10⁴) integer quantizer of the exact
+  *    k-means / IVF family, `array<float>` → `array<bigint>`;
+  *  - [[CentroidSquaredL2]]: integer squared-L2 of one quantized vector to
+  *    every centroid of a one-row broadcast centroid array — one Lloyd
+  *    assignment pass as a narrow per-row map instead of an explode of
+  *    every component joined to every centroid.
   */
 package org.apache.spark.sql.graft
 
@@ -236,11 +247,138 @@ case class RpBandKeys(child: Expression, planes: Array[Array[Float]],
   }
 }
 
+/** The integer quantizer of the exact k-means / IVF family as one per-row
+  * expression: element `x` → `CAST(ROUND(CAST(x AS DOUBLE) * 10000, 0) AS
+  * BIGINT) + 10000`, bit for bit. Catalyst's `round` on a double is HALF_UP
+  * on its shortest decimal form; for a double `d` that is HALF_UP on the
+  * exact value (`k + 0.5` is a double whenever |d| < 2⁵², so no shortest
+  * form can cross it), which [[VectorKernels.quantize]] computes with
+  * `floor` and an exact fraction test — no BigDecimal per element.
+  *
+  * A NULL element quantizes to NULL (the explode-then-round formulation
+  * keeps a NULL component row); a NULL vector is NULL. A non-finite or
+  * out-of-range element raises, as the ANSI cast does.
+  */
+case class QuantizeVector(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def prettyName: String = "quantize_vector"
+
+  override protected def nullSafeEval(input: Any): Any =
+    VectorKernels.quantize(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, v => s"${VectorKernels.javaName}.quantize($v)")
+
+  override protected def withNewChildInternal(newChild: Expression): QuantizeVector =
+    copy(child = newChild)
+}
+
+/** Integer squared-L2 of one quantized vector to every centroid:
+  * `vec: array<bigint>`, `centroids: array<array<bigint>>` → `array<bigint>`
+  * whose element j is Σᵢ (vec[i]·vecScale − centroids[j][i])², in `Long`
+  * with overflow-checked arithmetic (ANSI SUM raises, so must this).
+  *
+  * The sum runs the way the relational formulation (explode the vector,
+  * join each component to the centroid's on the index, `SUM` per pair)
+  * aggregates it: over the indices both arrays have, skipping a pair with
+  * a NULL side; NULL when no pair contributes. A NULL centroid array
+  * yields a NULL distance, a NULL vector a NULL result.
+  */
+case class CentroidSquaredL2(left: Expression, right: Expression, vecScale: Long)
+    extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(ArrayType(LongType), ArrayType(ArrayType(LongType)))
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def prettyName: String = "centroid_squared_l2"
+
+  override protected def nullSafeEval(v: Any, cs: Any): Any =
+    VectorKernels.squaredL2s(v.asInstanceOf[ArrayData], cs.asInstanceOf[ArrayData], vecScale)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (v, cs) =>
+      s"${VectorKernels.javaName}.squaredL2s($v, $cs, ${vecScale}L)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CentroidSquaredL2 =
+    copy(left = newLeft, right = newRight)
+}
+
+/** The per-row loops behind [[QuantizeVector]] and [[CentroidSquaredL2]],
+  * shared by their interpreted and generated paths (the generated code
+  * calls these static methods, so both paths run the same arithmetic).
+  */
+object VectorKernels {
+  private[graft] val javaName: String = getClass.getName.stripSuffix("$")
+
+  private val QuantScale = 10000.0
+  private val QuantShift = 10000L
+
+  /** HALF_UP(x·10⁴) + 10⁴ — see [[QuantizeVector]]. */
+  def quantize(x: Float): Long = {
+    val d = x.toDouble * QuantScale // exact: 24-bit mantissa × 14-bit 10⁴
+    val a = math.abs(d)
+    if (!(a < Long.MaxValue.toDouble)) // NaN, ±Inf, |d| ≥ 2⁶³: the ANSI cast raises
+      throw new ArithmeticException(s"quantize_vector: $x × 10000 does not fit BIGINT")
+    val f = math.floor(a)
+    val r = (if (a - f >= 0.5) f + 1 else f).toLong // a - f is exact
+    Math.addExact(if (d < 0) -r else r, QuantShift)
+  }
+
+  def quantize(v: ArrayData): ArrayData = {
+    val n = v.numElements()
+    val out = UnsafeArrayData.createFreshArray(n, 8)
+    var i = 0
+    while (i < n) {
+      if (v.isNullAt(i)) out.setNullAt(i) else out.setLong(i, quantize(v.getFloat(i)))
+      i += 1
+    }
+    out
+  }
+
+  def squaredL2s(v: ArrayData, cs: ArrayData, vecScale: Long): ArrayData = {
+    val k = cs.numElements()
+    val out = UnsafeArrayData.createFreshArray(k, 8)
+    val nv = v.numElements()
+    var j = 0
+    while (j < k) {
+      if (cs.isNullAt(j)) out.setNullAt(j)
+      else {
+        val c = cs.getArray(j)
+        val n = math.min(nv, c.numElements())
+        var s = 0L
+        var any = false
+        var i = 0
+        while (i < n) {
+          if (!v.isNullAt(i) && !c.isNullAt(i)) {
+            val diff = Math.subtractExact(Math.multiplyExact(v.getLong(i), vecScale), c.getLong(i))
+            s = Math.addExact(s, Math.multiplyExact(diff, diff))
+            any = true
+          }
+          i += 1
+        }
+        if (any) out.setLong(j, s) else out.setNullAt(j)
+      }
+      j += 1
+    }
+    out
+  }
+}
+
 object VectorExpressions {
   /** Column API over the native expression. */
   def fastDot(a: Column, b: Column): Column =
     ExpressionUtils.column(FloatVectorDot(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+
+  /** `array<float>` → `array<bigint>` ×10⁴(+10⁴) quantized (see [[QuantizeVector]]). */
+  def quantize(v: Column): Column =
+    ExpressionUtils.column(QuantizeVector(ExpressionUtils.expression(v)))
+
+  /** Squared L2 of `vec·vecScale` to every centroid (see [[CentroidSquaredL2]]). */
+  def centroidSquaredL2(vec: Column, centroids: Column, vecScale: Long): Column =
+    ExpressionUtils.column(CentroidSquaredL2(
+      ExpressionUtils.expression(vec), ExpressionUtils.expression(centroids), vecScale))
 
   /** All LSH band keys in one pass (see [[RpBandKeys]]); `array<int>`
     * indexed by band id — consume with `posexplode`.

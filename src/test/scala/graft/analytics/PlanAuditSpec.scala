@@ -401,15 +401,52 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("k-means: centroids broadcast on every assignment round; no cartesian") {
-    // both Lloyd rounds join the exploded component stream against a k×64
-    // centroid frame — at any corpus size that side is broadcast-sized, so
-    // the assignment must plan as BroadcastHashJoin (the component stream
-    // never shuffles for the join) and nothing may degrade to a cartesian.
+    // both Lloyd rounds score each vector row against ONE row holding the
+    // current k×64 centroids — at any corpus size that side is one row, so
+    // the assignment must plan as a broadcast nested-loop join (the vector
+    // stream never shuffles for it) and nothing may degrade to a cartesian.
     val finalPlan = executedPlanOf("q_kmeans_assign").split("== Initial Plan ==")(0)
     assert(!finalPlan.contains("CartesianProduct"), finalPlan.take(4000))
-    assert(finalPlan.contains("BroadcastHashJoin"), finalPlan.take(4000))
+    assert(finalPlan.contains("BroadcastNestedLoopJoin"), finalPlan.take(4000))
     assert(!finalPlan.contains("SortMergeJoin"),
       "centroid join degraded to SMJ: " + finalPlan.take(4000))
+  }
+
+  test("k-means: assignment passes are per-row kernels — no join on the component index") {
+    // the relational Lloyd pass exploded every component and joined it to
+    // every centroid's on `i`; the kernel pass keeps one row per vector
+    // and its only joins are unkeyed against the ≤1-row centroid array
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val df = graft.SparkEntry.queries("q_kmeans_assign")(spark, sf())
+    val joins = df.queryExecution.optimizedPlan.collect { case j: Join => j }
+    assert(joins.size == 2, s"expected one centroid join per Lloyd round:\n${joins.mkString("\n")}")
+    joins.foreach { j =>
+      assert(!j.condition.exists(_.references.exists(_.name == "i")),
+        s"assignment joins on the component index:\n$j")
+      assert(j.condition.isEmpty && j.right.maxRows.exists(_ <= 1),
+        s"centroid side is not a single broadcast row:\n$j")
+    }
+  }
+
+  test("exact embedding dedup: the sort sits on a single-partition exchange, not a range exchange on the nested-loop join") {
+    // a range exchange samples its input: directly on the O(n²) join that
+    // sample job ran every dot product once and the shuffle ran them again
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    object H extends AdaptiveSparkPlanHelper
+    val df = graft.SparkEntry.queries("q_dedup_embedding")(spark, sf())
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    def hasBnlj(p: org.apache.spark.sql.execution.SparkPlan) =
+      H.find(p)(_.isInstanceOf[BroadcastNestedLoopJoinExec]).isDefined
+    assert(hasBnlj(plan), plan.toString)
+    val rangeOverJoin = H.collect(plan) {
+      case x: ShuffleExchangeExec
+          if x.outputPartitioning.isInstanceOf[RangePartitioning] && hasBnlj(x.child) => x
+    }
+    assert(rangeOverJoin.isEmpty, plan.toString)
   }
 
   test("time travel: journal winners anti-join the snapshot; no cartesian") {

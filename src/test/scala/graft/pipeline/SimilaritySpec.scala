@@ -315,6 +315,124 @@ class SimilaritySpec extends SparkSpec {
     assert(run(e) == run(e.repartition(1)))
   }
 
+  /** The relational Lloyd formulation the native kernels replaced — explode
+    * every component, join it to every centroid's on the index, SUM per
+    * (vector, cluster), min(struct(dist, cluster)) per vector. Kept here
+    * only as the reference the kernels must reproduce bit for bit.
+    */
+  private object RelationalLloyd {
+    type DF = org.apache.spark.sql.DataFrame
+    def components(e: DF): DF =
+      e.select($"vec_id", posexplode($"embedding").as(Seq("i", "vf")))
+        .select($"vec_id", $"i",
+          (round($"vf".cast("double") * 10000, 0).cast("long") + 10000L).as("v"))
+    def distances(q: DF, cells: DF): DF = {
+      val diff = $"v" * 100L - $"c"
+      q.join(broadcast(cells), "i").groupBy("vec_id", "cluster").agg(sum(diff * diff).as("dist"))
+    }
+    def argmin(d: DF): DF =
+      d.groupBy("vec_id").agg(min(struct($"dist", $"cluster")).as("m"))
+        .select($"vec_id", $"m.cluster".as("cluster"), $"m.dist".as("dist"))
+    def centroids(q: DF, k: Int): DF = {
+      val c0 = q.filter($"vec_id" < k)
+        .select($"vec_id".cast("int").as("cluster"), $"i", ($"v" * 100L).as("c"))
+      q.join(argmin(distances(q, c0)).select("vec_id", "cluster"), "vec_id")
+        .groupBy("cluster", "i").agg(expr("(SUM(v) * 100) DIV COUNT(1)").as("c"))
+    }
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
+  /** Kernel path == relational path on corpus `e`: quantized components,
+    * round-2 centroids, the full round-2 distance table, and assignments.
+    */
+  private def assertKernelLloyd(e: org.apache.spark.sql.DataFrame, k: Int): Unit = {
+    val q = SimilarityQueries.quantizedVectors(e)
+    val rq = RelationalLloyd.components(e)
+    assert(rows(q.select($"vec_id", posexplode($"qv").as(Seq("i", "v")))) == rows(rq),
+      "quantizer differs from CAST(ROUND(x*10000, 0) AS BIGINT) + 10000")
+    val cent = SimilarityQueries.lloydCentroids(q, k)
+      .select(explode($"cent").as("m"))
+      .select($"m.cluster".as("cluster"), posexplode($"m.c").as(Seq("i", "c")))
+    val rcent = RelationalLloyd.centroids(rq, k)
+    assert(rows(cent) == rows(rcent), "round-2 centroids differ")
+    val dist = SimilarityQueries.kmeansDistances(e, k)
+      .select($"vec_id", explode($"dc").as("m"))
+      .select($"vec_id", $"m.cluster".as("cluster"), $"m.dist".as("dist"))
+    val rdist = RelationalLloyd.distances(rq, rcent)
+    assert(rows(dist) == rows(rdist), "round-2 distance table differs")
+    assert(rows(SimilarityQueries.kmeansAssignments(e, k)) == rows(RelationalLloyd.argmin(rdist)),
+      "assignments differ")
+  }
+
+  test("k-means kernels reproduce the relational Lloyd: random corpora") {
+    Seq((1, 60, 16), (2, 200, 64), (3, 41, 7)).foreach { case (seed, n, dim) =>
+      val rnd = new scala.util.Random(seed)
+      val e = (0 until n).map(id =>
+        (id.toLong, Array.fill(dim)((rnd.nextGaussian() * 0.3).toFloat))).toDF("vec_id", "embedding")
+      assertKernelLloyd(e, k = 8)
+    }
+  }
+
+  test("k-means kernels reproduce the relational Lloyd: x*10^4 on the .5 HALF_UP boundary, both signs") {
+    // x = m/32 (m odd) is a float whose x*10^4 is EXACTLY m*312.5; its float
+    // neighbours sit a hair either side of the boundary
+    val rnd = new scala.util.Random(7)
+    val onBoundary = (1 to 63 by 2).map(_ / 32f)
+    val values = onBoundary.flatMap(x => Seq(x, -x, Math.nextUp(x), Math.nextDown(x),
+      -Math.nextUp(x), -Math.nextDown(x))) ++
+      Seq(0f, -0f, 0.00005f, -0.00005f, 0.00015f, -0.00015f, 1e-9f, -1e-9f) ++
+      Seq.fill(400)((rnd.nextGaussian() * math.pow(10, rnd.nextInt(6) - 4)).toFloat)
+    val dim = 8
+    val e = values.grouped(dim).filter(_.size == dim).zipWithIndex
+      .map { case (v, id) => (id.toLong, v.toArray) }.toSeq.toDF("vec_id", "embedding")
+    assert(onBoundary.forall(x => math.abs(x.toDouble * 10000) % 1 == 0.5), "boundary fixture")
+    assertKernelLloyd(e, k = 4)
+  }
+
+  test("k-means kernels reproduce the relational Lloyd: ties, an emptied cluster, NULL elements") {
+    // a vector equidistant from two centroids takes the LOWER cluster, in
+    // the full pipeline (vec 2 ties the inits 0 and 1 in round 1) ...
+    val tie = Seq((0L, Array(0.1f, 0f)), (1L, Array(-0.1f, 0f)), (2L, Array(0f, 0.2f)),
+      (3L, Array(0f, -0.2f)), (4L, Array(0.12f, 0.01f))).toDF("vec_id", "embedding")
+    assertKernelLloyd(tie, k = 2)
+    // ... and against explicit centroids: vec 0 = (0.1, 0) quantizes to
+    // (11000, 10000), ×100 = (1100000, 1000000) — 10^10 from clusters 3
+    // and 5, 1.04·10^10 from cluster 1
+    val q = SimilarityQueries.quantizedVectors(tie)
+    val cells = Seq((5, 0, 1000000L), (5, 1, 1000000L), (3, 0, 1100000L), (3, 1, 900000L),
+      (1, 0, 1000000L), (1, 1, 1020000L)).toDF("cluster", "i", "c")
+    val kern = SimilarityQueries.centroidDistances(q, SimilarityQueries.centroidArray(cells))
+      .select($"vec_id", array_min($"dc").as("m"))
+      .select($"vec_id", $"m.cluster".as("cluster"), $"m.dist".as("dist"))
+    val rel = RelationalLloyd.argmin(RelationalLloyd.distances(RelationalLloyd.components(tie), cells))
+    assert(rows(kern) == rows(rel))
+    // vec 0 = (0.1, 0) → v = (11000, 10000): clusters 5 and 1 both at 10^10
+    assert(rows(kern.filter($"vec_id" === 0)) == Set(Seq(0L, 3, 10000000000L)))
+
+    // identical inits 0 and 5: cluster 5 is empty after round 1 and must
+    // not survive as a centroid
+    val v = Array.fill(8)(0.1f)
+    val dup = ((0 until 8).map { id =>
+      (id.toLong, if (id == 0 || id == 5) v else Array.tabulate(8)(j => (if (j < 4) 0.5f else 0.01f) + id * 0.001f))
+    } :+ ((100L, v.map(_ + 0.0005f)))).toDF("vec_id", "embedding")
+    assertKernelLloyd(dup, k = 8)
+    assert(!SimilarityQueries.lloydCentroids(SimilarityQueries.quantizedVectors(dup), 8)
+      .select(explode($"cent.cluster")).collect().map(_.getInt(0)).contains(5))
+
+    // NULL elements (in an init vector and a later one), a NULL and an
+    // empty vector: NULL components are skipped by SUM in both formulations
+    val rnd = new scala.util.Random(5)
+    def vec(nullAt: Set[Int]) = Seq.tabulate(6)(j =>
+      if (nullAt(j)) None else Some((rnd.nextGaussian() * 0.3).toFloat))
+    val withNulls = ((0 until 30).map(id => (id.toLong, Option(vec(
+      if (id == 1) Set(2) else if (id == 20) Set(0, 5) else Set.empty)))) ++
+      Seq((30L, None), (31L, Some(Seq.empty[Option[Float]]))))
+      .toDF("vec_id", "embedding")
+    assertKernelLloyd(withNulls, k = 4)
+  }
+
   test("SemDeDup pairs: exact-cosine subset of the all-pairs baseline, recall is the blocking trade") {
     def pairSet(name: String) =
       graft.SparkEntry.queries(name)(spark, sf())
