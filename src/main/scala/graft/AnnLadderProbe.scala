@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ×10 growth datapoints for the round-15 ANN ladder + MMR corpus stages
@@ -25,16 +25,9 @@ import org.apache.spark.sql.functions._
 object AnnLadderProbe {
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
-    val replicas = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPLICAS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val replicas = GraftSession.intEnv("SPARK_GRAFT_SCALE_REPLICAS", 10)
+    val cpus = GraftSession.cpus
+    val spark = GraftSession()
 
     val base = spark.read.parquet(s"$src/embeddings.parquet")
     val nBase = base.count()
@@ -49,7 +42,7 @@ object AnnLadderProbe {
       (0 until replicas).map(k => base.withColumn("vec_id",
           col("vec_id") + lit(k.toLong * 10000000L)))
         .reduce(_ unionAll _)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(dir)
     }
     val big = spark.read.parquet(dir)

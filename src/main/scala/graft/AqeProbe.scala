@@ -39,25 +39,19 @@ object AqeProbe {
     // one JVM, sequential sessions: stop the previous context so each
     // config is honored from scratch
     SparkSession.getActiveSession.foreach(_.stop())
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+    GraftSession(
+      "spark.sql.shuffle.partitions" -> parts.toString,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
       // the skew axis models corpus-sized-both-sides (at 100 TB neither
       // join side broadcasts), and the skew/advisory thresholds scale to
       // the probe's MB-sized data so the SAME code path fires that
       // default thresholds fire at production sizes
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "2m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "2m",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1m")
   }
 
   /** The FINAL adaptive plan (AQEShuffleRead nodes live inside the

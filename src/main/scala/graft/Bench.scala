@@ -1,20 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // per-query repetitions; the reported number is the MEDIAN, so one-off
     // JIT/GC/IO interference doesn't masquerade as a plan regression
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val reps = GraftSession.intEnv("SPARK_GRAFT_BENCH_REPS", 3)
+    val spark = GraftSession()
     // settle barrier: the driver launches the bench minutes after a full
     // test session, and r6 showed 1.3–1.8× swings on UNTOUCHED queries from
     // that ambient load even under ISOLATE=1. Wait (bounded) for the 1-min
@@ -24,11 +15,11 @@ object Bench {
       try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
         .split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
-    val settleMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_SETTLE_SECS", "180").toInt
+    val settleMax = GraftSession.intEnv("SPARK_GRAFT_BENCH_SETTLE_SECS", 180)
     // cpus/16 (= 2.0 at local[32]): the r7 driver run sailed through the old
     // cpus/4 = 8 gate at loadavg 2.06 and still ran 27% over its idle number
-    val settleTarget = sys.env.getOrElse("SPARK_GRAFT_BENCH_SETTLE_TARGET",
-      (cpus.toDouble / 16.0).toString).toDouble
+    val settleTarget =
+      GraftSession.doubleEnv("SPARK_GRAFT_BENCH_SETTLE_TARGET", GraftSession.cpus / 16.0)
     val settleStart = System.nanoTime()
     val loadAtLaunch = loadavg1() // -1 = unmeasurable (no /proc/loadavg)
     var load = loadAtLaunch
@@ -83,15 +74,16 @@ object Bench {
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .filter { case (n, _) => !exclude.exists(_.contains(n)) }
       .sortBy(_._1)
+    val Seeded = """seed:(-?\d{1,18})""".r
     val ordered = order match {
       case "alpha" => sortedNames
       case "reverse" => sortedNames.reverse
-      case s if s.startsWith("seed:") =>
-        val seed = s.stripPrefix("seed:").toLong
+      case Seeded(seed) =>
         sortedNames.sortBy { case (n, _) =>
-          java.util.Objects.hash(n, java.lang.Long.valueOf(seed))
+          java.util.Objects.hash(n, java.lang.Long.valueOf(seed.toLong))
         }
-      case other => sys.error(s"SPARK_GRAFT_BENCH_ORDER=$other (alpha|reverse|seed:<n>)")
+      case other => throw new IllegalArgumentException(
+        s"SPARK_GRAFT_BENCH_ORDER='$other' is not alpha, reverse or seed:<n>")
     }
     // ISOLATE=1 (default): clear the SQL cache + force a GC before each
     // query, so one query's leftovers (cached relations, un-collected

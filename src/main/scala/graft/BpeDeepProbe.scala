@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the deep BPE trainer's wall-clock law: cost grows with
@@ -18,16 +17,8 @@ import org.apache.spark.sql.functions._
 object BpeDeepProbe {
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BPE_PASSES", "6").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val passes = GraftSession.intEnv("SPARK_GRAFT_BPE_PASSES", 6)
+    val spark = GraftSession()
 
     def state0 = pipeline.BpeQueries.deepPhraseState(
       spark.read.parquet(s"$src/documents.parquet"))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Drives the deep BPE trainer an order of magnitude past the gated
   * regime (r14 verdict item 4): the registered gate proves 18×32 ≈ 274
   * rules; production tokenizers need 30k+. This probe trains ≥ 4,096
@@ -28,27 +26,19 @@ import org.apache.spark.sql.SparkSession
   */
 object BpeDepthProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val nDocs = sys.env.getOrElse("SPARK_GRAFT_DEPTH_DOCS", "20000").toLong
+    val nDocs = GraftSession.longEnv("SPARK_GRAFT_DEPTH_DOCS", 20000)
     val tokensPerDoc = 64
     // wide enough that disjoint batches never starve, dense enough
     // (E[adjacency count per pair] = tokens/vocab² ≈ 1.2) that the
     // top-512 ranking stays count-driven instead of collapsing into
     // lexical cnt=1 ties that share left symbols
-    val vocab = sys.env.getOrElse("SPARK_GRAFT_DEPTH_VOCAB", "1024").toInt
+    val vocab = GraftSession.intEnv("SPARK_GRAFT_DEPTH_VOCAB", 1024)
     // ~150-170 disjoint rules survive each top-512 scan (symbol collisions
     // take the rest), so 32 passes clears the 4096-rule floor with margin
-    val passes = sys.env.getOrElse("SPARK_GRAFT_DEPTH_PASSES", "32").toInt
+    val passes = GraftSession.intEnv("SPARK_GRAFT_DEPTH_PASSES", 32)
     val batch = 256 // ≤ DeepScan/2 so a full batch is always reachable
     val minRules = 4096L
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // deterministic wide-vocabulary corpus: token j of doc i is word
     // pmod(xxhash64(i, j), vocab), rendered as a 3-letter base-26 word

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialize a full ×10 testdata directory ("sf1") from sf0.1 so the
@@ -36,16 +36,8 @@ import org.apache.spark.sql.functions._
 object BuildSf1 {
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF1_SRC", "/root/testdata/sf0.1")
-    val replicas = sys.env.getOrElse("SPARK_GRAFT_SF1_REPLICAS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val replicas = GraftSession.intEnv("SPARK_GRAFT_SF1_REPLICAS", 10)
+    val spark = GraftSession()
     val dir = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "target/sf1"))
       .getAbsolutePath
 

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 import graft.cdc.{CdcApplier, CdcEvent, CdcMetrics, CdcOp, CdcPipeline, TableStore}
 import graft.fixtures.HealthcareFixtures
 import graft.model.HealthcareSchema
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -44,21 +43,13 @@ object CdcSoak {
     else sorted(math.min(sorted.size - 1, math.ceil(q * sorted.size).toInt - 1).max(0))
 
   def main(args: Array[String]): Unit = {
-    val minutes = sys.env.getOrElse("SPARK_GRAFT_SOAK_MINUTES", "31").toDouble
-    val triggerSec = sys.env.getOrElse("SPARK_GRAFT_SOAK_TRIGGER_SEC", "60").toInt
-    val feedSec = sys.env.getOrElse("SPARK_GRAFT_SOAK_FEED_SEC", "12").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // recentProgress is a ring buffer (default ~100); a multi-hour soak at
-      // the 60 s trigger exceeds it and the post-stop tally would silently
-      // drop the oldest batches — size it to the longest soak we run
-      .config("spark.sql.streaming.numRecentProgressUpdates", "1000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val minutes = GraftSession.doubleEnv("SPARK_GRAFT_SOAK_MINUTES", 31)
+    val triggerSec = GraftSession.intEnv("SPARK_GRAFT_SOAK_TRIGGER_SEC", 60)
+    val feedSec = GraftSession.intEnv("SPARK_GRAFT_SOAK_FEED_SEC", 12)
+    // recentProgress is a ring buffer (default ~100); a multi-hour soak at
+    // the 60 s trigger exceeds it and the post-stop tally would silently
+    // drop the oldest batches — size it to the longest soak we run
+    val spark = GraftSession("spark.sql.streaming.numRecentProgressUpdates" -> "1000")
     import spark.implicits._
 
     val base = Files.createTempDirectory("graft-cdc-soak")

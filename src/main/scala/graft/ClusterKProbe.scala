@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures the k ∝ n contract of the cluster-blocked pair families
   * (SemDeDup / hard-negative mining): their candidate volume is Σ|c|²,
   * so a cluster count PINNED while the corpus grows turns a linear axis
@@ -16,15 +14,7 @@ import org.apache.spark.sql.SparkSession
 object ClusterKProbe {
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_K_SRC", "target/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val e = spark.read.parquet(s"$src/embeddings.parquet")
     val n = e.count()
 

@@ -40,23 +40,16 @@ object ClusterProbe {
     val jar = sys.env.getOrElse("SPARK_GRAFT_JAR",
       sys.error("SPARK_GRAFT_JAR must point at the packaged graft jar"))
     val src = sys.env.getOrElse("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
-    val replicas = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPLICAS", "20").toInt
+    val replicas = GraftSession.intEnv("SPARK_GRAFT_SCALE_REPLICAS", 20)
 
     def session(master: String): SparkSession = {
-      val b = SparkSession.builder()
-        .master(master)
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-      val withJar =
+      val cluster =
         if (master.startsWith("spark://"))
-          b.config("spark.jars", jar)
-            .config("spark.executor.cores", "8")
-            .config("spark.executor.memory", "12g")
-            .config("spark.cores.max", "16")
-        else b
-      withJar.getOrCreate()
+          Seq("spark.jars" -> jar, "spark.executor.cores" -> "8",
+            "spark.executor.memory" -> "12g", "spark.cores.max" -> "16")
+        else Nil
+      GraftSession(Seq("spark.master" -> master,
+        "spark.sql.shuffle.partitions" -> "32") ++ cluster: _*)
     }
 
     def embPool(spark: SparkSession, k: Int): DataFrame = {

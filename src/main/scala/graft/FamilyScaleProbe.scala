@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,17 +31,9 @@ import org.apache.spark.sql.functions._
 object FamilyScaleProbe {
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
-    val replicas = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPLICAS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val replicas = GraftSession.intEnv("SPARK_GRAFT_SCALE_REPLICAS", 10)
+    val spark = GraftSession("spark.sql.shuffle.partitions" ->
+      GraftSession.intEnv("SPARK_GRAFT_SHUFFLE_PARTITIONS", GraftSession.cpus).toString)
     val dir = new java.io.File(s"target/scale_probe_x$replicas").getAbsolutePath
 
     // corpus build (documents as in ScaleProbe; events new here) — reused
@@ -484,7 +476,7 @@ object FamilyScaleProbe {
       // wall time at this scale), and its first execution AT SCALE pays
       // one-off shuffle-buffer/heap growth — measured r10 on dedup_prefix
       // ×20: 37 s first execution vs 13.5 s steady state, enough to turn a
-      // true ~3× ratio into a reported 30× (PrefixRepro). Warm both sides.
+      // true ~3× ratio into a reported 30×. Warm both sides.
       f(src).count()
       val (s1, n1) = time(f(src))
       f(dir).count()

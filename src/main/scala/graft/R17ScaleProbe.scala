@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ×100 growth datapoints for the round-16 wave (the r16 verdict's ask:
@@ -28,16 +28,8 @@ import org.apache.spark.sql.functions._
 object R17ScaleProbe {
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
-    val replicas = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPLICAS", "100").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val replicas = GraftSession.intEnv("SPARK_GRAFT_SCALE_REPLICAS", 100)
+    val spark = GraftSession()
 
     val emb = spark.read.parquet(s"$src/embeddings.parquet")
       .select("vec_id", "embedding")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ≥10× scale datapoint for the dedup family (r6 verdict item 6).
@@ -30,22 +29,13 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
-    val replicas = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPLICAS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val replicas = GraftSession.intEnv("SPARK_GRAFT_SCALE_REPLICAS", 10)
     // shuffle partitions default to the core count like Bench, but are
     // overridable: intermediate volume grows with the corpus while a fixed
     // partition count eventually spills — on a cluster AQE re-sizes this,
     // locally the probe lets you measure the effect directly
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("spark.sql.shuffle.partitions" ->
+      GraftSession.intEnv("SPARK_GRAFT_SHUFFLE_PARTITIONS", GraftSession.cpus).toString)
     val dir = new java.io.File(s"target/scale_probe_x$replicas").getAbsolutePath
 
     // SPARK_GRAFT_SCALE_REUSE=1 skips the corpus build when this replica
@@ -125,8 +115,7 @@ object ScaleProbe {
     // threshold on the scaled corpus (the baseline's O(n²) guard admits it
     // up to 100k vectors) — the datapoint behind the "sized for high-τ
     // dedup" claim in adaptiveBanding's scaladoc
-    val recallJson = sys.env.get("SPARK_GRAFT_SCALE_RECALL_TAU").map { tauS =>
-      val tau = tauS.toDouble
+    val recallJson = GraftSession.doubleOpt("SPARK_GRAFT_SCALE_RECALL_TAU").map { tau =>
       val key = (r: org.apache.spark.sql.Row) => (r.getLong(0), r.getLong(1))
       val exact = pipeline.SimilarityQueries
         .exactNearDupPairs(embAll, minCos = tau)
@@ -150,9 +139,8 @@ object ScaleProbe {
     // the planted (known-similarity, exactly re-scored) pairs the adaptive
     // LSH emits at τ. This is the NON-VACUOUS datapoint behind the "14
     // bands clear ≥90% at τ=0.8" scaladoc claim.
-    val plantJson = sys.env.get("SPARK_GRAFT_SCALE_PLANT_TAU").map { tauS =>
-      val tau = tauS.toDouble
-      val nPlant = sys.env.getOrElse("SPARK_GRAFT_SCALE_PLANT_N", "500").toInt
+    val plantJson = GraftSession.doubleOpt("SPARK_GRAFT_SCALE_PLANT_TAU").map { tau =>
+      val nPlant = GraftSession.intEnv("SPARK_GRAFT_SCALE_PLANT_N", 500)
       val base = embAll.orderBy("vec_id").limit(nPlant)
         .select("vec_id", "embedding").collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ×10 growth datapoints for the data-selection family (q_dsir_weights /
@@ -23,16 +23,9 @@ import org.apache.spark.sql.functions._
 object SelectionScaleProbe {
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
-    val replicas = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPLICAS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val replicas = GraftSession.intEnv("SPARK_GRAFT_SCALE_REPLICAS", 10)
+    val cpus = GraftSession.cpus
+    val spark = GraftSession()
 
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val baseMax = docs.agg(max("doc_id")).collect()(0).getLong(0) + 1
@@ -63,7 +56,7 @@ object SelectionScaleProbe {
       val budget = dw.agg(expr("SUM(n_tok) DIV 4").as("budget"))
       graft.operators.PrefixRank.withRunningTotal(dw,
           Seq(col("weight").desc, col("doc_id")), col("n_tok"), "cum",
-          cpus.toInt)
+          cpus)
         .crossJoin(broadcast(budget))
         .filter(col("cum") <= col("budget"))
         .agg(count(lit(1))).collect()(0).getLong(0)

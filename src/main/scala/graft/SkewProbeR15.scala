@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 
 /** Adversarial-skew probe for the round-15 operators — the new
   * families' untested skew axes, each with an EXACTNESS check against an
@@ -31,15 +30,8 @@ import org.apache.spark.sql.SparkSession
 object SkewProbeR15 {
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SKEW_SRC", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession()
     def num(d: Double) = BigDecimal(d).setScale(2, BigDecimal.RoundingMode.HALF_UP)
 
     val docs = spark.read.parquet(s"$src/documents.parquet")
@@ -78,7 +70,7 @@ object SkewProbeR15 {
       .withColumn("weight", lit(7L)) // every weight identical
     val t1 = System.nanoTime()
     val cut = operators.PrefixRank.withRunningTotal(tied,
-        Seq(col("weight").desc, col("doc_id")), col("n_tok"), "cum", cpus.toInt)
+        Seq(col("weight").desc, col("doc_id")), col("n_tok"), "cum", cpus)
       .select("doc_id", "cum")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val tieSecs = (System.nanoTime() - t1) / 1e9
@@ -102,7 +94,7 @@ object SkewProbeR15 {
       .collect()(0).getDouble(0)
     val t2 = System.nanoTime()
     val ranked = operators.PrefixRank.withGroupRank(asg, Seq("cluster"),
-        Seq(col("dist"), col("vec_id")), "rk", cpus.toInt)
+        Seq(col("dist"), col("vec_id")), "rk", cpus)
     val cn = asg.groupBy("cluster").agg(count(lit(1)).as("n_total"))
     val kept = ranked.join(broadcast(cn), "cluster")
       .filter(col("rk") > expr("n_total DIV 2"))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ×10 growth datapoints for the tokenizer SERVING paths (WordPiece
@@ -25,16 +25,8 @@ import org.apache.spark.sql.functions._
 object TokenizerServeProbe {
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
-    val replicas = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPLICAS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val replicas = GraftSession.intEnv("SPARK_GRAFT_SCALE_REPLICAS", 10)
+    val spark = GraftSession()
 
     val docs = spark.read.parquet(s"$src/documents.parquet")
     // serving inventories are trained ONCE on the base corpus's src0 —

@@ -68,17 +68,9 @@ object ZipfSkewProbe {
 
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SKEW_SRC", "/root/testdata/sf0.1")
-    val replicas = sys.env.getOrElse("SPARK_GRAFT_SKEW_REPLICAS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val replicas = GraftSession.intEnv("SPARK_GRAFT_SKEW_REPLICAS", 10)
+    val spark = GraftSession("spark.sql.shuffle.partitions" ->
+      GraftSession.intEnv("SPARK_GRAFT_SHUFFLE_PARTITIONS", GraftSession.cpus).toString)
 
     val dirBig = buildCorpus(spark, src, replicas)
     val dirOne = buildCorpus(spark, src, 1)

@@ -292,11 +292,6 @@ object BpeQueries {
     * symbol-DISJOINT pairs driver-side. Returns the selection in rank
     * order plus (n_tokens, vocab) of the scanned state.
     */
-  /** Probe seam (R17BpeOptProbe): the selection job alone. */
-  private[pipeline] def probeSelect(state: org.apache.spark.sql.DataFrame,
-      batch: Int, scanDepth: Int): Seq[(String, String, Long, Long)] =
-    selectBatchAndTotals(state, batch, scanDepth)._1
-
   private def selectBatchAndTotals(state: org.apache.spark.sql.DataFrame,
       batch: Int, scanDepth: Int)
       : (Seq[(String, String, Long, Long)], Long, Long) = {

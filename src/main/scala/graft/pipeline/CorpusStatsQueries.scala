@@ -45,9 +45,6 @@ object CorpusStatsQueries {
     * case) — the DuckDB oracle keeps the hex chain, so the gates prove the
     * derivations equal bit-for-bit.
     */
-  /** Test/micro-bench access to [[hllRegisters]]. */
-  def hllRegistersForTest(raw: DataFrame): DataFrame = hllRegisters(raw)
-
   private[pipeline] def hllRegisters(raw: DataFrame): DataFrame =
     raw.select(col("source"),
         SketchExpressions.md5Hi64(concat(lit("hll:"), col("tok"))).as("h8"))

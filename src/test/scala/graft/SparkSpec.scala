@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (getOrCreate dedups across suites in
-  * one JVM; sbt forks a single test JVM).
+  * one JVM; sbt forks a single test JVM). The mains' conf, pinned to 4
+  * cores so test plans don't depend on the machine.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
@@ -12,12 +13,7 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  val Cpus = 4
+  lazy val session: SparkSession =
+    GraftSession.build(Cpus, "spark.app.name" -> "graft-test")
 }
