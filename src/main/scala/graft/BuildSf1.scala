@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   * individually, but only a full-suite run surfaces cross-query JIT /
   * code-cache / memory effects).
   *
-  * Replication is FK-consistent and replica-decorrelated, reusing the
-  * probe schemes ([[ScaleProbe]] / [[FamilyScaleProbe]]) so every table's
+  * Replication is FK-consistent and replica-decorrelated, so every table's
   * growth axis matches the linearity claims already measured per family:
   *  - PKs and the FKs that reference them shift by k·10⁷ per replica
   *    (customer/orders/lineitem/part/supplier stay join-consistent;

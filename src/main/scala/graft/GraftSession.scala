@@ -48,14 +48,10 @@ object GraftSession {
   }
 
   def intEnv(name: String, default: Int): Int = intFrom(sys.env, name, default)
-  def longEnv(name: String, default: Long): Long = longFrom(sys.env, name, default)
   def doubleEnv(name: String, default: Double): Double = doubleFrom(sys.env, name, default)
-  def doubleOpt(name: String): Option[Double] = parse(sys.env, name, "a number")(_.toDoubleOption)
 
   def intFrom(env: Map[String, String], name: String, default: Int): Int =
     parse(env, name, "an integer")(_.toIntOption).getOrElse(default)
-  def longFrom(env: Map[String, String], name: String, default: Long): Long =
-    parse(env, name, "an integer")(_.toLongOption).getOrElse(default)
   def doubleFrom(env: Map[String, String], name: String, default: Double): Double =
     parse(env, name, "a number")(_.toDoubleOption).getOrElse(default)
 

@@ -158,11 +158,10 @@ object BpeQueries {
   }
 
   /** The training loop over a (word, freq) dictionary — separated from the
-    * registered query so FamilyScaleProbe can drive it with a wider
-    * alphabet over the replicated corpus (the ×k replica tokens carry
-    * digits, which the registered letters-only fixture would drop).
+    * registered query so other dictionaries can drive it (the OOV face's
+    * src0 rules, BpeDeepSpec's character-level reference).
     * `stage` toggles OracleStage materialization (the registered face
-    * stages every round for the DuckDB oracle; the probe does not).
+    * stages every round for the DuckDB oracle; the other callers do not).
     */
   private[graft] def trainTrace(wf: org.apache.spark.sql.DataFrame,
       rounds: Int, stage: Boolean): org.apache.spark.sql.DataFrame = {
@@ -221,7 +220,7 @@ object BpeQueries {
   // not corpus size. The deep trainer amortizes: each PASS selects a
   // whole BATCH of merges and applies them in one map-only fold, so
   // wall-clock grows with passes while merges grow with batch width
-  // (BpeDeepProbe measures exactly that).
+  // (the `bpe_deep` probe face measures exactly that).
   //
   // Batch rule (deterministic, bounded, SQL-replayable): rank pairs by
   // priority (cnt DESC, lsym, rsym), take the top-M ranks (M = DeepScan,
@@ -535,7 +534,7 @@ object BpeQueries {
   }
 
   /** The phrase-level state-0 builder shared by the registered gate,
-    * BpeDeepProbe, SkewProbeR14, FamilyScaleProbe, and BpeDeepSpec: one
+    * the `bpe_deep` and `skew_r14` probe faces, and BpeDeepSpec: one
     * (word = doc key, freq = 1, syms = token sequence) row per document,
     * docs dropped WHOLE unless every token matches `tokenPattern`
     * (dropping individual tokens would glue non-adjacent words into fake

@@ -69,7 +69,7 @@ object RetrievalQueries {
   /** The batched lexical arm end-to-end over a (doc_id, toks) corpus:
     * (query_id, doc_id, score_x1m) for every matched (query, candidate)
     * pair, own-doc excluded. Shared by the registered gate and
-    * SkewProbeR14 (which drives it with a term planted in EVERY document).
+    * the `skew_r14` probe face (which plants a term in EVERY document).
     */
   private[graft] def batchLexScores(t: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {

@@ -427,7 +427,7 @@ object SimilarityQueries {
     * q_hard_negatives with the blocking granularity exposed. The gate pins
     * k=8 so the DuckDB oracle can replay the clustering; the PRODUCTION
     * contract is k ∝ n (candidate volume is Σ|c|², so fixed k turns the
-    * linear axis quadratic as the corpus grows — `graft.ClusterKProbe`
+    * linear axis quadratic as the corpus grows — the `cluster_k` probe face
     * measures exactly that trade at ×10, where k 8→64 collapses the
     * blow-up while mining from the same clustered structure).
     */
@@ -509,7 +509,7 @@ object SimilarityQueries {
 
   /** Per-cluster population profile of the k-means blocking at cluster
     * count `k`: (clusters, max population, Σ|c|² candidate pairs) — the
-    * cost model behind the k ∝ n contract, shared with ClusterKProbe.
+    * cost model behind the k ∝ n contract, shared with the `cluster_k` probe face.
     */
   private[graft] def clusterPairBudget(e: org.apache.spark.sql.DataFrame,
       k: Int): (Long, Long, Long) = {
@@ -1433,7 +1433,7 @@ object SimilarityQueries {
   /** Binary pre-filter + exact rerank at shortlist depth `depth`: the
     * q_ann_binary_hamming pipeline with the oversampling knob exposed —
     * BinaryHammingSpec sweeps it to gate the recall-vs-depth law, and
-    * AnnLadderProbe pins `queryPred` to a FIXED batch so the ×10 corpus
+    * the `ann_ladder` probe face pins `queryPred` to a FIXED batch so the ×10 corpus
     * axis scales the scan without also scaling the query side.
     */
   private[graft] def binaryHammingTopK(e: org.apache.spark.sql.DataFrame,

@@ -55,14 +55,11 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(GraftSession.intFrom(Map.empty, "SPARK_GRAFT_BENCH_REPS", 3) == 3)
     assert(GraftSession.intFrom(Map("SPARK_GRAFT_BENCH_REPS" -> " 5 "),
       "SPARK_GRAFT_BENCH_REPS", 3) == 5)
-    assert(GraftSession.longFrom(Map("SPARK_GRAFT_DEPTH_DOCS" -> "30000000000"),
-      "SPARK_GRAFT_DEPTH_DOCS", 20000) == 30000000000L)
     assert(GraftSession.doubleFrom(Map("SPARK_GRAFT_SOAK_MINUTES" -> "0.5"),
       "SPARK_GRAFT_SOAK_MINUTES", 31) == 0.5)
     val cases: Seq[(String, String, Map[String, String] => Any)] = Seq(
       ("SPARK_GRAFT_BENCH_REPS", "3x", GraftSession.intFrom(_, "SPARK_GRAFT_BENCH_REPS", 3)),
       ("SPARK_GRAFT_SCALE_REPLICAS", "", GraftSession.intFrom(_, "SPARK_GRAFT_SCALE_REPLICAS", 10)),
-      ("SPARK_GRAFT_DEPTH_DOCS", "2e4", GraftSession.longFrom(_, "SPARK_GRAFT_DEPTH_DOCS", 20000)),
       ("SPARK_GRAFT_SOAK_MINUTES", "half", GraftSession.doubleFrom(_, "SPARK_GRAFT_SOAK_MINUTES", 31)))
     for ((name, bad, read) <- cases) {
       val e = intercept[IllegalArgumentException](read(Map(name -> bad)))
