@@ -8,7 +8,7 @@ object Bench {
     val spark = GraftSession()
     // settle barrier: the driver launches the bench minutes after a full
     // test session, and r6 showed 1.3–1.8× swings on UNTOUCHED queries from
-    // that ambient load even under ISOLATE=1. Wait (bounded) for the 1-min
+    // that ambient load even with per-query isolation. Wait (bounded) for the 1-min
     // loadavg to drain below cpus/4 before timing anything, and report what
     // was observed so a dirty environment is visible in the artifact.
     def loadavg1(): Double =
@@ -85,14 +85,12 @@ object Bench {
       case other => throw new IllegalArgumentException(
         s"SPARK_GRAFT_BENCH_ORDER='$other' is not alpha, reverse or seed:<n>")
     }
-    // ISOLATE=1 (default): clear the SQL cache + force a GC before each
-    // query, so one query's leftovers (cached relations, un-collected
-    // garbage) can't bill to the next. Round-5 forensics (BASELINE.md) showed
-    // un-isolated runs attribute 13–49 s of GC debt to whichever heavy
-    // self-join runs at the wrong position — the victim MOVED with run order
-    // (alpha: minhash 16 s; reverse: embedding_lsh 52 s; isolated: every
-    // dedup query 2.9–3.6 s). Set ISOLATE=0 to measure session drift itself.
-    val isolate = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATE", "1") == "1"
+    // isolation: clear the SQL cache + force a GC before each query, so one
+    // query's leftovers (cached relations, un-collected garbage) can't bill
+    // to the next. Round-5 forensics (BASELINE.md) showed un-isolated runs
+    // attribute 13–49 s of GC debt to whichever heavy self-join runs at the
+    // wrong position — the victim MOVED with run order (alpha: minhash 16 s;
+    // reverse: embedding_lsh 52 s; isolated: every dedup query 2.9–3.6 s).
     // per-rep PROCESS-CPU seconds next to wall seconds: wall ≫ cpu with low
     // spill = the box was busy (load regression); cpu tracking wall = the
     // plan itself got more expensive. Separable from the JSON alone — the
@@ -100,7 +98,7 @@ object Bench {
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     val detailed = ordered.map { case (name, fn) =>
-      if (isolate) { spark.catalog.clearCache(); System.gc() }
+      spark.catalog.clearCache(); System.gc()
       // loadavg sampled at the START of each rep: a mover in the artifact is
       // then attributable to ambient load (or exonerated) without a rerun
       val runs = (1 to reps).flatMap { _ =>
@@ -143,8 +141,9 @@ object Bench {
       "\"" + k + "\":[" + cs.map(fmt).mkString(",") + "]"
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    // -1 preserved: "unmeasured" must never read as "idle"
-    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir","reps":$reps,"loadavg_launch":${fmt(loadAtLaunch)},"loadavg_timed":${fmt(load)},"settle_secs":${fmt(settledSecs)},"settle_target":${fmt(settleTarget)},"reps_detail":$repsDetail,"reps_load":$repsLoad,"reps_cpu":$repsCpu}"""
+    // -1 preserved: "unmeasured" must never read as "idle"; `cpus` lets the
+    // CPU-mover gate refuse to compare runs on unlike core counts
+    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir","reps":$reps,"cpus":${GraftSession.cpus},"loadavg_launch":${fmt(loadAtLaunch)},"loadavg_timed":${fmt(load)},"settle_secs":${fmt(settledSecs)},"settle_target":${fmt(settleTarget)},"reps_detail":$repsDetail,"reps_load":$repsLoad,"reps_cpu":$repsCpu}"""
     println(json)
     // the driver's log tail truncates; persist the full per-query list so a
     // round's numbers are always recoverable from the repo itself.

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import graft.cdc.{CdcApplier, CdcEvent, CdcMetrics, CdcOp, CdcPipeline, TableStore}
+import graft.cdc.{BucketedTableStore, CdcApplier, CdcEvent, CdcMetrics, CdcOp, CdcPipeline}
 import graft.fixtures.HealthcareFixtures
 import graft.model.HealthcareSchema
 import org.apache.spark.sql.functions._
@@ -24,8 +24,8 @@ import org.apache.spark.sql.streaming.Trigger
   * `CdcSoakArtifactSpec` gates the committed artifact (≥ the minimum
   * span, ≥1 restart, p99 ≪ budget, 0 mismatches).
   *
-  * Round-12 extensions (r11 verdict item 7): the destination can be the
-  * BUCKETED copy-on-write store (SPARK_GRAFT_SOAK_BUCKETED=1), and at 75%
+  * Round-12 extensions (r11 verdict item 7): the destination is the
+  * BUCKETED copy-on-write store, and at 75%
   * of the soak the feeder starts shipping a NEW COLUMN in its after-images
   * (`checkin_kiosk`, the source-side ALTER TABLE ADD COLUMN) — the
   * pipeline's widening probe must evolve the live destination mid-stream,
@@ -33,8 +33,7 @@ import org.apache.spark.sql.streaming.Trigger
   * (pre-evolution rows NULL, post-evolution rows exact).
   *
   * Knobs: SPARK_GRAFT_SOAK_MINUTES (default 31), SPARK_GRAFT_SOAK_TRIGGER_SEC
-  * (default 60), SPARK_GRAFT_SOAK_FEED_SEC (default 12),
-  * SPARK_GRAFT_SOAK_BUCKETED (default 1).
+  * (default 60), SPARK_GRAFT_SOAK_FEED_SEC (default 12).
   */
 object CdcSoak {
 
@@ -58,10 +57,7 @@ object CdcSoak {
     val ckpt = s"$base/ckpt"
     Files.createDirectories(Paths.get(feedDir))
 
-    val bucketed = sys.env.getOrElse("SPARK_GRAFT_SOAK_BUCKETED", "1") == "1"
-    val store: graft.cdc.CdcDestination =
-      if (bucketed) new graft.cdc.BucketedTableStore(spark, storeRoot, nBuckets = 16)
-      else new TableStore(spark, storeRoot)
+    val store = new BucketedTableStore(spark, storeRoot, nBuckets = 16)
     val pipeline = new CdcPipeline(spark, store, HealthcareSchema.all,
       HealthcareSchema.keyColumns)
     pipeline.loadSnapshot(HealthcareFixtures.all(spark))
@@ -198,7 +194,7 @@ object CdcSoak {
         s""""rows_applied":${batches.map(_.inputRows).sum},""" +
         s""""apply_ms_p50":${quantile(lat, 0.50)},"apply_ms_p95":${quantile(lat, 0.95)},""" +
         s""""apply_ms_p99":${quantile(lat, 0.99)},"apply_ms_max":${if (lat.isEmpty) 0L else lat.last},""" +
-        s""""bucketed":$bucketed,"evolved_at_sec":${fmt(evolvedAtSec)},""" +
+        s""""bucketed":true,"evolved_at_sec":${fmt(evolvedAtSec)},""" +
         s""""evolution_lsn":${if (evolutionLsn == Long.MaxValue) -1 else evolutionLsn},""" +
         s""""evolved_rows":$evolvedRows,""" +
         s""""state_missing":$missing,"state_mismatches":$mismatches}"""

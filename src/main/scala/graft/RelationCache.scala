@@ -1,60 +1,44 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 
-/** Session-scoped cache of RESOLVED parquet base relations — catalog
+/** Resolved parquet base relations, kept as session temp views — catalog
   * metadata only (schema + file index), exactly what a warehouse engine
   * keeps in its catalog between queries.
   *
   * Why (r18, guide §1/§7.3 driver-side work): every query construction was
   * re-running `spark.read.parquet(path)` — a driver file listing plus a
-  * parquet footer schema read — for each of its 1-4 tables, every bench rep.
-  * The r18 tail probe measured the hc_ and sm_ families spending 0.24-0.31 s
-  * per rep in CONSTRUCTION (4 fixture dirs re-resolved) vs 0.07-0.15 s
-  * executing. Caching the resolved DataFrame per (session, path) removes
-  * that re-resolution; the query's own analysis/optimization/execution is
-  * untouched and recomputed per rep.
+  * parquet footer schema read (one Spark job) — for each of its 1-4 tables,
+  * every bench rep. The hc_ and sm_ families spent 0.24-0.31 s per rep in
+  * CONSTRUCTION vs 0.07-0.15 s executing. A temp view holds the analyzed
+  * relation, so `spark.table` skips that re-resolution; the query's own
+  * analysis/optimization/execution is untouched and recomputed per rep.
   *
-  * What this is NOT: result or data caching. The returned DataFrame is the
-  * lazy scan relation; no rows are materialized, nothing is keyed on query
-  * results, and `spark.catalog.clearCache()` (the bench's isolation step)
-  * has nothing of ours to clear. At 100 TB the same role is played by the
-  * metastore/manifest cache (`spark.sql.hive.filesourcePartitionFileCacheSize`,
-  * Iceberg/Delta manifests).
+  * The view name is `graft_rel_<sha1(canonical path)[0..16]>_<stamp>`:
+  *  - the canonical path makes every spelling of one directory (relative,
+  *    absolute, `dir/./name`, a symlink) share one view;
+  *  - the stamp hashes the directory and its direct children, so any
+  *    rewrite (new part files, changed sizes or mtimes) yields a new name
+  *    and a fresh resolve — no writer has to invalidate anything, and an
+  *    in-place regeneration can never serve a stale file list
+  *    (IvfPqServeSpec's regeneration test pins this);
+  *  - views live in the session's catalog, so they die with the session.
   *
-  * Contract: ONLY for paths whose contents are immutable for the lifetime
-  * of the session AFTER first read — the driver testdata (read-only) and
-  * the one-shot healthcare fixture / persisted-artifact stores (written
-  * once per JVM before first read, atomic publish). Writers that rebuild a
-  * path mid-session must call [[invalidate]].
+  * Catalog tables plus `REFRESH TABLE` cannot replace the stamp: a path
+  * rewritten by code that never calls refresh (that regeneration test)
+  * would then read deleted files.
   *
-  * Sessions are held WEAKLY so test suites that spin up many sessions
-  * don't leak plans.
+  * What this is NOT: result or data caching. No rows are materialized,
+  * and `spark.catalog.clearCache()` (the bench's isolation step) has
+  * nothing of ours to clear.
   */
 object RelationCache {
-  private val bySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, (Long, DataFrame)]]()
-
-  private def map(spark: SparkSession) = bySession.synchronized {
-    var m = bySession.get(spark)
-    if (m == null) {
-      m = scala.collection.concurrent.TrieMap.empty[String, (Long, DataFrame)]
-      bySession.put(spark, m)
-    }
-    m
-  }
 
   /** Cheap staleness stamp: (mtime, length, name) of the path and its
     * DIRECT children, hashed — a handful of stat calls (~µs), vs the full
-    * listing + footer schema read a re-resolution costs. An in-place
-    * regeneration (new part files, changed sizes or mtimes) flips the
-    * stamp and forces a re-resolve, so a same-session rewrite can never
-    * serve a stale file list (IvfPqServeSpec's regeneration test pins
-    * this).
+    * listing + footer schema read a re-resolution costs.
     */
-  private def stamp(path: String): Long = {
-    val f = new java.io.File(path)
+  private def stamp(f: java.io.File): Long = {
     var h = f.lastModified * 31 + f.length
     val kids = f.listFiles()
     if (kids != null) kids.foreach { k =>
@@ -65,39 +49,24 @@ object RelationCache {
     h
   }
 
-  def parquet(spark: SparkSession, path: String): DataFrame = {
-    val m = map(spark)
-    val s = stamp(path)
-    m.get(path) match {
-      case Some((st, df)) if st == s => df
-      case _ =>
-        val df = spark.read.parquet(path)
-        m.put(path, (s, df))
-        df
-    }
+  /** The temp-view name for `path`'s current contents. */
+  private def viewName(path: String): String = {
+    val f = new java.io.File(path).getCanonicalFile
+    val sha = java.security.MessageDigest.getInstance("SHA-1")
+      .digest(f.getPath.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+    s"graft_rel_${sha}_${java.lang.Long.toHexString(stamp(f))}"
   }
 
-  /** Drop every session's entry for `path` — call after rewriting it. */
-  def invalidate(path: String): Unit = bySession.synchronized {
-    val it = bySession.values().iterator()
-    while (it.hasNext) { it.next().remove(path): Unit }
-  }
-
-  /** Drop every cached entry whose path starts with `prefix` — hooked into
-    * the store layer's recursive delete so a path that is wiped and
-    * recreated (test stores, re-built fixtures) can never serve a stale
-    * file listing.
+  /** The resolved relation for `path`: a view hit costs a catalog lookup,
+    * a miss resolves the path once and registers it.
     */
-  def invalidatePrefix(prefix: String): Unit = bySession.synchronized {
-    val it = bySession.values().iterator()
-    while (it.hasNext) {
-      val m = it.next()
-      m.keys.filter(_.startsWith(prefix)).foreach(m.remove)
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val name = viewName(path)
+    try spark.table(name)
+    catch {
+      case _: AnalysisException =>
+        spark.read.parquet(path).createOrReplaceTempView(name)
+        spark.table(name)
     }
-  }
-
-  /** Test seam: drop everything. */
-  private[graft] def clear(): Unit = bySession.synchronized {
-    bySession.clear()
   }
 }

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * whose DuckDB oracle reads the very same files — the independent
   * correctness gate the reference suite needs — and (b) queries stop paying
   * per-invocation fixture regeneration (they read immutable parquet, like any
-  * production table).
+  * production table). Reads go through [[graft.RelationCache]], whose view
+  * names carry a content stamp, so a rebuild needs no invalidation.
   *
   * Two states are materialized:
   *
@@ -244,7 +245,6 @@ object HealthcareData {
     sums.map(s => (s.batchId, s.inputRows, s.applyMillis, s.applyMillis <= 60000L))
       .toDF("batch_id", "input_rows", "apply_millis", "within_budget")
       .coalesce(1).write.mode("overwrite").parquet(s"$Root/cdc_metrics")
-    graft.RelationCache.invalidate(s"$Root/cdc_metrics")
   }
 
   /** Per-micro-batch apply metrics of the streamed replay ([[CdcMetrics]]
@@ -256,11 +256,8 @@ object HealthcareData {
     graft.RelationCache.parquet(spark, s"$Root/cdc_metrics")
   }
 
-  private def write(df: DataFrame, table: String): Unit = {
+  private def write(df: DataFrame, table: String): Unit =
     df.coalesce(1).write.mode("overwrite").parquet(s"$Root/$table")
-    // fixture reads are RelationCache'd; a rewrite must drop stale listings
-    graft.RelationCache.invalidate(s"$Root/$table")
-  }
 
   private def build(spark: SparkSession): Unit = {
     import spark.implicits._

@@ -16,10 +16,8 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** r18: resolved relations are cached per (session, path) — catalog
-    * metadata (schema + file index), never rows; see [[graft.RelationCache]].
-    * The testdata is read-only by contract (TESTDATA.md), so the listing
-    * can never go stale within a session.
+  /** Resolved once per session as a temp view — catalog metadata (schema
+    * + file index), never rows; see [[graft.RelationCache]].
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     graft.RelationCache.parquet(spark, s"$dir/$name.parquet")

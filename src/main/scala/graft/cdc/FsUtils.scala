@@ -17,8 +17,6 @@ private[graft] object FsUtils {
       try walk.sorted(java.util.Comparator.reverseOrder[Path]())
         .forEach(f => Files.delete(f))
       finally walk.close()
-      // a deleted-and-recreated path must never serve a stale cached listing
-      graft.RelationCache.invalidatePrefix(p.toAbsolutePath.toString)
     }
 
   /** Eager, stream-closing directory listing. */

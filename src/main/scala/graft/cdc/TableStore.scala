@@ -30,8 +30,8 @@ final class TableStore(spark: SparkSession, root: String, outputFiles: Int = 0)
   override def read(table: String): DataFrame = {
     val v = currentVersion(table).getOrElse(
       throw new IllegalStateException(s"table $table has no committed version under $root"))
-    // a committed version dir is immutable — safe to cache its resolved
-    // relation (schema + file index) per session; see graft.RelationCache
+    // the resolved relation (schema + file index) is a session temp view,
+    // renamed whenever the version dir's contents change; see graft.RelationCache
     graft.RelationCache.parquet(spark, Paths.get(root, table, s"v$v").toString)
   }
 

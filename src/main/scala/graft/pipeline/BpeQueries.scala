@@ -721,8 +721,7 @@ object BpeQueries {
           path
         })
       })
-      // resolved artifact dirs are immutable after atomic publish — cache
-      // the relation metadata per session (graft.RelationCache)
+      // the relation metadata is a session temp view (graft.RelationCache)
       graft.RelationCache.parquet(spark, resolved)
     }
 
@@ -1029,7 +1028,7 @@ object BpeQueries {
       // measurement (build 2.0 s at 4-wide, 1.38 at 8, 1.44 at 16): this
       // is pure interpreted-HOF CPU, the regime where the shingle A/B also
       // picked 8 (Fanout doc).
-      val encoded = Fanout(st0, "SPARK_GRAFT_OOV_FANOUT", default = 8)
+      val encoded = Fanout(st0, cap = 8)
         .select(col("word"), col("freq"), col("n_raw"),
           expr(composed).as("syms")).stableCheckpoint()
       val j = encoded.join(

@@ -156,13 +156,13 @@ object DedupQueries {
     // q_source_overlap lesson; measured again here in r17). Shuffling
     // raw docs is cheap (rows, not shingles); at 100 TB the scan has
     // thousands of splits and this is a no-op-sized skew safety net.
-    // Width min(8, parallelism), SPARK_GRAFT_SHINGLE_FANOUT overrides: r18
+    // Width min(8, parallelism): r18
     // measured the r17 `defaultParallelism` (=32 local) width burning
     // 3-13x the process CPU of the serial shape for a ~1.2x wall win
     // (allocation/GC churn of 32 concurrent string-heavy explode tasks;
     // same pathology as the rejected PQ fan-out); 8 keeps ~all of the wall
     // win inside the CPU-mover gate.
-    Fanout(docs, "SPARK_GRAFT_SHINGLE_FANOUT", default = 8)
+    Fanout(docs, cap = 8)
       .select(col("doc_id"),
         explode(TextFunctions.wordShingles(TextFunctions.tokens(col("text")))).as("sh"))
       // EAGER checkpoint: every caller fans this frame into several

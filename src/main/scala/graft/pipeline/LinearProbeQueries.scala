@@ -82,7 +82,7 @@ object LinearProbeQueries {
     // r18: 4-wide fan-out before the 2210-cell explode (Fanout doc — the
     // checkpointed xy is one partition at the gate corpus, and the r17
     // single-core explode was the pass's critical path)
-    val cells = Fanout(xy, "SPARK_GRAFT_GRAM_FANOUT").select(explode(expr(
+    val cells = Fanout(xy).select(explode(expr(
         s"""concat(
            |  flatten(transform(sequence(0, $Dim), i ->
            |    transform(sequence(i, $Dim), j ->

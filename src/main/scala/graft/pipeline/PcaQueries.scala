@@ -144,8 +144,7 @@ object PcaQueries {
       // 2.85 → 1.81 s but multiplied process-CPU ~6x — rejected. r18
       // root-caused the inflation as width-proportional (see Fanout);
       // min(4, parallelism) keeps the wall win inside the CPU gate.)
-      val q = Fanout(e.select(col("vec_id"), col("label"), qCol.as("q")),
-        "SPARK_GRAFT_GRAM_FANOUT")
+      val q = Fanout(e.select(col("vec_id"), col("label"), qCol.as("q")))
 
       // corpus passes 1+2: Gramian upper triangle + column sums — both
       // map-side-combinable, output d(d+1)/2 + d rows regardless of corpus

@@ -389,9 +389,8 @@ object SimilarityQueries {
     // knob is WIDTH, not on/off. r18 idle A/B over the 8 PQ/Lloyd faces:
     // width 1 = 17.7 s wall / 40 CPU-s, width 4 = 15.0 / 48 (every query
     // ≤1.5x CPU — inside the mover gate), width 8 = 14.3 / 62 (serve_batch
-    // 2.17x CPU — gate fail). min(4, parallelism) kept; env override
-    // SPARK_GRAFT_PQ_FANOUT.)
-    Fanout(e, "SPARK_GRAFT_PQ_FANOUT")
+    // 2.17x CPU — gate fail). min(4, parallelism) kept.)
+    Fanout(e)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "vf")))
       .select(col("vec_id"), col("i"), expr("i DIV 16").as("sub"),
         (round(col("vf").cast("double") * 10000, 0).cast("long") + 10000L).as("v"))
@@ -1313,7 +1312,7 @@ object SimilarityQueries {
     // r18: 4-wide fan-out before the Gramian/rotation explodes (see Fanout)
     val q = Fanout(e.select(col("vec_id"), expr(
       "transform(embedding, v -> CAST(FLOOR(CAST(v AS DOUBLE) * 1024 + 0.5D) AS BIGINT))")
-      .as("q")), "SPARK_GRAFT_GRAM_FANOUT")
+      .as("q")))
     // bounded corpus aggregates: Gramian upper triangle + sums + count
     val gram = q.select(explode(expr(
         s"""flatten(transform(sequence(0, ${dim - 1}), i ->

@@ -88,8 +88,21 @@ class BenchArtifactSpec extends AnyFunSuite {
     * refresh it when a round's artifact becomes the new baseline. Wall
     * stays the headline number; this gate only adjudicates shared-query
     * movers mechanically.
+    *
+    * Process-CPU per query depends on the core count (an 8-core run against
+    * a 32-core baseline tripped four "movers" that were only the width
+    * change), so both artifacts must record the same `cpus` before any
+    * query is compared.
     */
   test("no shared-query CPU-median mover above 2x vs the previous round's artifact") {
+    def cpus(node: com.fasterxml.jackson.databind.JsonNode): Option[Int] =
+      Option(node.get("cpus")).filter(_.canConvertToInt).map(_.asInt)
+    val (nowCpus, wasCpus) = (cpus(root), cpus(prev))
+    if (nowCpus.isEmpty || nowCpus != wasCpus) fail(
+      s"unlike runs: last_run.json cpus=${nowCpus.getOrElse("absent")}, " +
+        s"prev_run.json cpus=${wasCpus.getOrElse("absent")} — CPU medians compare " +
+        "only between runs on the same core count; re-run graft.Bench on the " +
+        "baseline's count (SPARK_GRAFT_CPUS)")
     val now = cpuMedians(root)
     val was = cpuMedians(prev)
     assert(now.nonEmpty && was.nonEmpty, "reps_cpu missing from an artifact")
