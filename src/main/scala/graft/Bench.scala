@@ -147,16 +147,12 @@ object Bench {
     println(json)
     // the driver's log tail truncates; persist the full per-query list so a
     // round's numbers are always recoverable from the repo itself.
-    // A SPARK_GRAFT_BENCH_ONLY run defaults to a _partial path: the
-    // committed full-coverage artifact (what BenchArtifactSpec gates and
-    // BASELINE.md quotes) must never be clobbered by a local iteration
-    // loop (it happened once — a 2-query loop overwrote the 184-query
-    // artifact and the suite went red on the next full run).
-    val defaultOut =
-      if (only.isDefined || exclude.isDefined) "bench/last_run_partial.json"
-      else "bench/last_run.json"
+    // Publishing is explicit (SPARK_GRAFT_BENCH_OUT=bench/last_run.json):
+    // every other run, full or filtered, writes under target/, so the
+    // committed artifact that BenchArtifactSpec gates and BASELINE.md quotes
+    // is never clobbered by a local loop or an unattended full run.
     val outPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut))
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench/last_run.json"))
     Option(outPath.getParent).foreach(java.nio.file.Files.createDirectories(_))
     java.nio.file.Files.write(outPath, json.getBytes("UTF-8"))
     spark.stop()

@@ -19,11 +19,24 @@ import org.apache.spark.sql.functions._
   * IEEE ops in DuckDB); averages are decimal-sum-as-double / count; rates are
   * computed on exact integer counts before the single ROUND.
   */
-final case class HealthcareTables(
-    patients: DataFrame,
-    doctors: DataFrame,
-    appointments: DataFrame,
-    visits: DataFrame)
+final class HealthcareTables(
+    patients0: => DataFrame,
+    doctors0: => DataFrame,
+    appointments0: => DataFrame,
+    visits0: => DataFrame) {
+  // each table resolves on first use: a query that reads two of the four
+  // pays for two relation resolutions, not four
+  lazy val patients: DataFrame = patients0
+  lazy val doctors: DataFrame = doctors0
+  lazy val appointments: DataFrame = appointments0
+  lazy val visits: DataFrame = visits0
+}
+
+object HealthcareTables {
+  def apply(patients: => DataFrame, doctors: => DataFrame,
+      appointments: => DataFrame, visits: => DataFrame): HealthcareTables =
+    new HealthcareTables(patients, doctors, appointments, visits)
+}
 
 object HealthcareQueries {
 

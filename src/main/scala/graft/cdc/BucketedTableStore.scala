@@ -5,11 +5,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Bucket-partitioned copy-on-write destination tables — the 100 TB merge
-  * path.
+/** Bucket-partitioned copy-on-write destination tables: the CDC
+  * pipeline's one store, from a demo table to the 100 TB merge path.
   *
-  * [[TableStore]] rewrites the WHOLE table per micro-batch commit: correct,
-  * but O(table) write amplification per batch. At CDC batch sizes (a few
+  * Rewriting the WHOLE table per micro-batch commit is correct, but costs
+  * O(table) write amplification per batch. At CDC batch sizes (a few
   * thousand changed keys against billions of rows) almost all of that work
   * rewrites rows the batch never touched. This store keys every row into one
   * of `nBuckets` hash buckets of the primary key and gives each bucket its
@@ -41,6 +41,10 @@ import org.apache.spark.sql.functions._
   * the table. Readers get the current snapshot as a union of per-bucket
   * paths; a crash between version write and manifest swap leaves the
   * previous manifest (and all files it references) intact.
+  *
+  * `nBuckets = 1` is the whole-table store: every merge reads and rewrites
+  * the one bucket — right for small and demo tables, where more buckets
+  * only add files.
   *
   * Mirrors the reference connector's observable MERGE behavior
   * (/root/reference sql/3.live_appointments.sql:48-49 sync cycles,
@@ -76,7 +80,8 @@ final class BucketedTableStore(
   /** ONE manifest-file parse → (bucket→version map, committed schema).
     * Every read path needs both; parsing once per operation halves manifest
     * I/O at the 60 s cadence and guarantees map and schema come from the
-    * same read of the file.
+    * same read of the file. The schema is None for manifests written before
+    * schema tracking.
     */
   private def parseManifest(table: String, n: Long):
       (Map[Int, Long], Option[org.apache.spark.sql.types.StructType]) = {
@@ -94,16 +99,6 @@ final class BucketedTableStore(
 
   /** bucket → bucket-version map of a specific manifest (time travel). */
   def manifestAt(table: String, n: Long): Map[Int, Long] = parseManifest(table, n)._1
-
-  /** The table schema as of manifest `n` (schema evolution: a merge that
-    * widens the table commits the wider schema WITH the manifest, atomically
-    * under the same pointer swap — untouched buckets' older files are then
-    * read with the manifest schema and null-fill the new columns, instead of
-    * a footer-merging `mergeSchema` scan over every file). None for
-    * manifests written before schema tracking.
-    */
-  def schemaAt(table: String, n: Long): Option[org.apache.spark.sql.types.StructType] =
-    parseManifest(table, n)._2
 
   /** Time travel: the table as of manifest `n` — consistent as long as the
     * versions it references have not been vacuumed.
@@ -128,12 +123,6 @@ final class BucketedTableStore(
   override def read(table: String): DataFrame = {
     val (m, schema) = currentParsed(table)
     readWith(table, m, m, schema)
-  }
-
-  /** Only the given buckets' current data (partition pruning by bucket). */
-  def readBuckets(table: String, buckets: Set[Int]): DataFrame = {
-    val (m, schema) = currentParsed(table)
-    readWith(table, m.view.filterKeys(buckets).toMap, m, schema)
   }
 
   /** Read the buckets of `slice` under the manifest's committed `schema`
@@ -255,7 +244,7 @@ final class BucketedTableStore(
     commitManifest(table, prev ++ written, merged.schema)
   }
 
-  /** Append-only journal sink (reference S5), same layout as TableStore. */
+  /** Append-only journal sink (reference S5), see [[Journals]]. */
   override def appendJournal(table: String, events: DataFrame): Unit =
     Journals.append(root, table, events)
 

@@ -3,13 +3,12 @@ package graft.cdc
 import org.apache.spark.sql.{Column, DataFrame}
 
 /** Destination-side contract of the CDC pipeline: snapshot commit,
-  * micro-batch merge, journal. Two implementations ship —
-  * [[TableStore]] (whole-table copy-on-write: simple, right for small/demo
-  * tables) and [[BucketedTableStore]] (bucket-partitioned copy-on-write:
-  * rewrites only the key buckets a batch touches — the 100 TB path). The
-  * streaming pipeline ([[CdcPipeline]]) is destination-agnostic; swapping
-  * the store changes write amplification, never semantics, which
-  * BucketedStoreSpec proves batch-by-batch.
+  * micro-batch merge, journal. One implementation ships —
+  * [[BucketedTableStore]] (bucket-partitioned copy-on-write: rewrites only
+  * the key buckets a batch touches; one bucket is a whole-table store). The
+  * streaming pipeline ([[CdcPipeline]]) is destination-agnostic; the bucket
+  * count changes write amplification, never semantics, which
+  * BucketedStoreSpec proves batch-by-batch against an in-memory fold.
   */
 trait CdcDestination {
 

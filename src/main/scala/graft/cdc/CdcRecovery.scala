@@ -33,7 +33,8 @@ object CdcRecovery {
     * because the journal witnesses every image.
     *
     * @param base    the recovery starting point — typically the retained
-    *                initial snapshot version (TableStore `readVersion(t, 0)`)
+    *                initial snapshot manifest
+    *                (`BucketedTableStore.readManifestVersion(t, 0)`)
     * @param journal raw journal rows: op, lsn, commitTs, key, after (JSON)
     * @param schema  declared destination data schema (incl. key)
     */

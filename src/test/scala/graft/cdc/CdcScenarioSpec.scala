@@ -20,6 +20,8 @@ class CdcScenarioSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  private def bucketsLabel(n: Int) = if (n == 1) "1 bucket" else s"$n buckets"
+
   private def apptEvent(op: String, lsn: Long, id: Long, status: String,
       date: String = "2025-01-15", time: String = "08:00:00"): CdcEvent =
     CdcEvent("appointments", op, lsn, ts("2025-01-15 08:00:00"), id,
@@ -58,7 +60,7 @@ class CdcScenarioSpec extends SparkSpec {
 
   test("live_appointments scenario: snapshot + 5 batches converge to the scripted state") {
     val root = Files.createTempDirectory("graft-cdc").toString
-    val store = new TableStore(spark, root)
+    val store = new BucketedTableStore(spark, root, nBuckets = 1)
     val pipeline = new CdcPipeline(spark, store, HealthcareSchema.all,
       HealthcareSchema.keyColumns,
       clock = () => lit("2025-01-15 08:00:00").cast("timestamp_ntz"))
@@ -127,7 +129,7 @@ class CdcScenarioSpec extends SparkSpec {
   test("streaming apply: file event feed through foreachBatch reaches the same state") {
     val root = Files.createTempDirectory("graft-cdc-stream").toString
     val feedDir = Files.createTempDirectory("graft-feed").toString
-    val store = new TableStore(spark, root)
+    val store = new BucketedTableStore(spark, root, nBuckets = 1)
     val pipeline = new CdcPipeline(spark, store, HealthcareSchema.all,
       HealthcareSchema.keyColumns,
       clock = () => lit("2025-01-15 08:00:00").cast("timestamp_ntz"))
@@ -152,12 +154,10 @@ class CdcScenarioSpec extends SparkSpec {
     assert(appts.filter($"appointment_id" === 3 && col(CdcApplier.MetaDeleted)).count() == 1)
   }
 
-  for ((storeKind, mkStore) <- Seq[(String, String => CdcDestination)](
-      "TableStore" -> (root => new TableStore(spark, root)),
-      "BucketedTableStore" -> (root => new BucketedTableStore(spark, root, nBuckets = 8))))
-  test(s"schema evolution: mid-stream ADD COLUMN widens the destination ($storeKind)") {
+  for (nBuckets <- Seq(1, 8))
+  test(s"schema evolution: mid-stream ADD COLUMN widens the destination (${bucketsLabel(nBuckets)})") {
     val root = Files.createTempDirectory("graft-cdc-evolve").toString
-    val store = mkStore(root)
+    val store = new BucketedTableStore(spark, root, nBuckets)
     val pipeline = new CdcPipeline(spark, store, HealthcareSchema.all,
       HealthcareSchema.keyColumns,
       clock = () => lit("2025-01-15 08:00:00").cast("timestamp_ntz"))
@@ -182,7 +182,7 @@ class CdcScenarioSpec extends SparkSpec {
       .select("priority").collect()(0).getString(0) == "high")
     // every pre-evolution row — snapshot rows, the batch-1 insert, and the
     // soft-deleted key — reads NULL, like ALTER TABLE ADD COLUMN gives them
-    // (for the bucketed store this exercises the mixed-schema read: only
+    // (with several buckets this exercises the mixed-schema read: only
     // touched buckets were rewritten with the wider schema)
     assert(appts.filter($"priority".isNotNull).count() == 1)
     assert(appts.filter($"appointment_id" === 1 && col(CdcApplier.MetaDeleted)).count() == 1)
@@ -212,36 +212,29 @@ class CdcScenarioSpec extends SparkSpec {
 
     // time travel respects the historic schema: a pre-evolution manifest
     // reads WITHOUT the added column (each manifest commits its own schema)
-    if (storeKind == "BucketedTableStore") {
-      val bs = store.asInstanceOf[BucketedTableStore]
-      val preEvo = bs.readManifestVersion("appointments", 1) // m1 = batch-1 merge
-      assert(!preEvo.columns.contains("priority"))
-      assert(preEvo.count() == 171)
-    }
+    val preEvo = store.readManifestVersion("appointments", 1) // m1 = batch-1 merge
+    assert(!preEvo.columns.contains("priority"))
+    assert(preEvo.count() == 171)
 
     // disaster recovery reproduces the evolution from the journal alone:
     // the rebuilt table carries the added column with the same values
-    if (storeKind == "TableStore") {
-      val ts = store.asInstanceOf[TableStore]
-      val rebuilt = CdcRecovery.rebuild(
-        ts.readVersion("appointments", 0),
-        store.readJournal("appointments"),
-        HealthcareSchema.all("appointments"), "appointment_id",
-        lit("2025-01-15 08:00:00").cast("timestamp_ntz"))
-      assert(rebuilt.columns.contains("priority"))
-      val live = afterRestart
-      val contentCols = live.columns
-        .filterNot(c => c == CdcApplier.MetaInserted || c == CdcApplier.MetaUpdated)
-        .sorted.toSeq
-      def canon(df: org.apache.spark.sql.DataFrame) =
-        df.select(contentCols.map(col): _*).collect().map(_.toString).sorted
-      assert(canon(rebuilt).sameElements(canon(live)))
-    }
+    val rebuilt = CdcRecovery.rebuild(
+      store.readManifestVersion("appointments", 0),
+      store.readJournal("appointments"),
+      HealthcareSchema.all("appointments"), "appointment_id",
+      lit("2025-01-15 08:00:00").cast("timestamp_ntz"))
+    assert(rebuilt.columns.contains("priority"))
+    val contentCols = afterRestart.columns
+      .filterNot(c => c == CdcApplier.MetaInserted || c == CdcApplier.MetaUpdated)
+      .sorted.toSeq
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.select(contentCols.map(col): _*).collect().map(_.toString).sorted
+    assert(canon(rebuilt).sameElements(canon(afterRestart)))
   }
 
   test("journal replay rebuilds the destination: snapshot v0 + one batch apply") {
     val root = Files.createTempDirectory("graft-cdc-rebuild").toString
-    val store = new TableStore(spark, root)
+    val store = new BucketedTableStore(spark, root, nBuckets = 1)
     val pipeline = new CdcPipeline(spark, store, HealthcareSchema.all,
       HealthcareSchema.keyColumns,
       clock = () => lit("2025-01-15 08:00:00").cast("timestamp_ntz"))
@@ -258,7 +251,7 @@ class CdcScenarioSpec extends SparkSpec {
 
     // "disaster": rebuild from the retained snapshot version + the journal
     val rebuilt = CdcRecovery.rebuild(
-      store.readVersion("appointments", 0),
+      store.readManifestVersion("appointments", 0),
       store.readJournal("appointments"),
       HealthcareSchema.all("appointments"), "appointment_id",
       lit("2025-01-15 08:00:00").cast("timestamp_ntz"))
@@ -274,12 +267,10 @@ class CdcScenarioSpec extends SparkSpec {
     assert(rebuilt.count() == 172)
   }
 
-  for ((storeKind, mkStore) <- Seq[(String, String => CdcDestination)](
-      "TableStore" -> (root => new TableStore(spark, root)),
-      "BucketedTableStore" -> (root => new BucketedTableStore(spark, root, nBuckets = 16))))
-  test(s"journal retention: vacuum to a covered horizon keeps rebuild exact ($storeKind)") {
+  for (nBuckets <- Seq(1, 16))
+  test(s"journal retention: vacuum to a covered horizon keeps rebuild exact (${bucketsLabel(nBuckets)})") {
     val root = Files.createTempDirectory("graft-cdc-retention").toString
-    val store = mkStore(root)
+    val store = new BucketedTableStore(spark, root, nBuckets)
     val pipeline = new CdcPipeline(spark, store, HealthcareSchema.all,
       HealthcareSchema.keyColumns,
       clock = () => lit("2025-01-15 08:00:00").cast("timestamp_ntz"))
@@ -295,10 +286,7 @@ class CdcScenarioSpec extends SparkSpec {
       ev(CdcOp.Update, 903, 950, "completed", "2025-01-12 09:00:00"),
       ev(CdcOp.Delete, 904, 6, null, "2025-01-12 10:00:00"))))
     // this version's state COVERS the journal through 01-12 — the horizon
-    val coveringVersion = store match {
-      case t: TableStore => t.currentVersion("appointments").get
-      case b: BucketedTableStore => b.currentManifest("appointments").get
-    }
+    val coveringVersion = store.currentManifest("appointments").get
     pipeline.applyEventBatch(spark.createDataset(Seq(
       ev(CdcOp.Update, 905, 951, "cancelled", "2025-01-14 09:00:00"))))
 
@@ -311,12 +299,9 @@ class CdcScenarioSpec extends SparkSpec {
 
     // disaster recovery still lands exactly on the live state: retained
     // version (≥ horizon) + retained journal
-    val base = store match {
-      case t: TableStore => t.readVersion("appointments", coveringVersion)
-      case b: BucketedTableStore => b.readManifestVersion("appointments", coveringVersion)
-    }
     val rebuilt = CdcRecovery.rebuild(
-      base, store.readJournal("appointments"),
+      store.readManifestVersion("appointments", coveringVersion),
+      store.readJournal("appointments"),
       HealthcareSchema.all("appointments"), "appointment_id",
       lit("2025-01-15 08:00:00").cast("timestamp_ntz"))
     val contentCols = store.read("appointments").columns
@@ -329,27 +314,22 @@ class CdcScenarioSpec extends SparkSpec {
     // vacuuming PAST the covered horizon would lose events — the doc'd
     // contract: rebuild from the pre-horizon version no longer matches
     val rebuiltTooOld = CdcRecovery.rebuild(
-      store match {
-        case t: TableStore => t.readVersion("appointments", 0)
-        case b: BucketedTableStore => b.readManifestVersion("appointments", 0)
-      },
+      store.readManifestVersion("appointments", 0),
       store.readJournal("appointments"),
       HealthcareSchema.all("appointments"), "appointment_id",
       lit("2025-01-15 08:00:00").cast("timestamp_ntz"))
     assert(!canon(rebuiltTooOld).sameElements(canon(store.read("appointments"))))
   }
 
-  // the restart guarantee must hold for EVERY destination implementation —
-  // exercised against both the whole-table and the bucketed store
-  for ((storeKind, mkStore) <- Seq[(String, String => CdcDestination)](
-      "TableStore" -> (root => new TableStore(spark, root)),
-      "BucketedTableStore" -> (root => new BucketedTableStore(spark, root, nBuckets = 16))))
-  test(s"restart from checkpoint resumes exactly-once ($storeKind)") {
+  // the restart guarantee must hold at every bucket count — exercised
+  // against a whole-table (1 bucket) and a partition-scoped (16) store
+  for (nBuckets <- Seq(1, 16))
+  test(s"restart from checkpoint resumes exactly-once (${bucketsLabel(nBuckets)})") {
     val root = Files.createTempDirectory("graft-cdc-restart").toString
     val feedDir = Files.createTempDirectory("graft-feed-restart").toString
     val ckpt = Files.createTempDirectory("graft-ckpt-restart").toString
     val clock = () => lit("2025-01-15 08:00:00").cast("timestamp_ntz")
-    val store = mkStore(root)
+    val store = new BucketedTableStore(spark, root, nBuckets)
     val pipeline = new CdcPipeline(spark, store, HealthcareSchema.all,
       HealthcareSchema.keyColumns, clock)
     pipeline.loadSnapshot(HealthcareFixtures.all(spark))
@@ -381,8 +361,8 @@ class CdcScenarioSpec extends SparkSpec {
     q2.awaitTermination(120000)
 
     // reference state: the same events applied through the batch path
-    val refStore = new TableStore(spark,
-      Files.createTempDirectory("graft-cdc-restart-ref").toString)
+    val refStore = new BucketedTableStore(spark,
+      Files.createTempDirectory("graft-cdc-restart-ref").toString, nBuckets = 1)
     val refPipeline = new CdcPipeline(spark, refStore, HealthcareSchema.all,
       HealthcareSchema.keyColumns, clock)
     refPipeline.loadSnapshot(HealthcareFixtures.all(spark))

@@ -126,12 +126,12 @@ class DebeziumFaceSpec extends SparkSpec {
     val clock = () => lit("2025-01-15 13:00:00").cast("timestamp_ntz")
 
     // reference state: the same events applied in-process
-    val refStore = new TableStore(spark, s"$base/ref")
+    val refStore = new BucketedTableStore(spark, s"$base/ref", nBuckets = 1)
     val refPipe = new CdcPipeline(spark, refStore, HealthcareSchema.all,
       HealthcareSchema.keyColumns, clock)
     refPipe.loadSnapshot(HealthcareFixtures.all(spark))
 
-    val dbzStore = new TableStore(spark, s"$base/dbz")
+    val dbzStore = new BucketedTableStore(spark, s"$base/dbz", nBuckets = 1)
     val dbzPipe = new CdcPipeline(spark, dbzStore, HealthcareSchema.all,
       HealthcareSchema.keyColumns, clock)
     dbzPipe.loadSnapshot(HealthcareFixtures.all(spark))
@@ -167,7 +167,7 @@ class DebeziumFaceSpec extends SparkSpec {
 
   test("schema evolution arrives through the wire format as a new map key") {
     val base = Files.createTempDirectory("graft-dbz-evo").toString
-    val store = new TableStore(spark, s"$base/store")
+    val store = new BucketedTableStore(spark, s"$base/store", nBuckets = 1)
     val pipe = new CdcPipeline(spark, store, HealthcareSchema.all,
       HealthcareSchema.keyColumns,
       clock = () => lit("2025-01-15 13:00:00").cast("timestamp_ntz"))
